@@ -24,35 +24,23 @@ object Sessions {
     "spark.sql.shuffle.partitions" -> shufflePartitions,
     "spark.sql.adaptive.enabled" -> "true",
     "spark.sql.adaptive.coalescePartitions.enabled" -> "true",
-    // PARALLELISM-SIZING KNOBS (r21; guide §2.2/§2.6 — the r20 driver
-    // measured the full suite FASTER at 8 cores than 32 because every
-    // stage's task count is core-derived). Both are env-parameterized so
-    // the A/B is a rerun, not a rebuild; defaults are the MEASURED
-    // winners at bench SF (see OPTIMIZATION_r21.md):
-    //  - parallelismFirst stays TRUE (Spark's default): the pure
-    //    byte-derived alternative (false + 64 MB advisory) collapses
-    //    compute-heavy small-byte stages — wedge explodes, shingle
-    //    joins — onto 1–2 tasks (measured: graph_triangles 3.6→8.1 s);
-    //  - minPartitionSize floors AQE's coalescing so KB-scale shuffle
-    //    partitions still merge under parallelismFirst;
-    //  - the scan-split floor (files.minPartitionNum) defaults to 8,
-    //    NOT the core count: Spark's core-derived default shreds an
-    //    11 MB page-cached parquet into 32 ~350 KB splits at local[32]
-    //    — pure scheduling overhead, the measured reason the r20 driver
-    //    found 8 cores beating 32 end-to-end. 8 is the measured knee
-    //    (full suite 261→225 s at local[32]; byte-derived 1 measured
-    //    WORSE — per-row scan compute needs the parallelism), and it is
-    //    core-count-independent, so the driver's 8-core scaling run
-    //    sees the same floor. [[clusterConf]] overrides the floor back
-    //    to total cores: on a fleet, a small input should still engage
-    //    every executor, and at 100 TB the byte-derived split count
-    //    (bytes / maxPartitionBytes) dwarfs any floor either way.
-    "spark.sql.adaptive.coalescePartitions.parallelismFirst" ->
-      sys.env.getOrElse("GRAFT_AQE_PARALLELISM_FIRST", "true"),
-    "spark.sql.adaptive.coalescePartitions.minPartitionSize" ->
-      sys.env.getOrElse("GRAFT_AQE_MIN_PARTITION_SIZE", "1m"),
-    "spark.sql.files.minPartitionNum" ->
-      sys.env.getOrElse("GRAFT_SCAN_MIN_PARTITIONS", "8"),
+    // PARALLELISM SIZING: the full suite measured FASTER at 8 cores than
+    // 32 because every stage's task count is core-derived. AQE coalescing keeps Spark's own defaults,
+    // the MEASURED winners at bench SF (OPTIMIZATION_r21.md):
+    // parallelismFirst=true (the byte-derived alternative collapses
+    // compute-heavy small-byte stages onto 1–2 tasks: graph_triangles
+    // 3.6→8.1 s) and minPartitionSize=1MB. The scan-split floor
+    // (files.minPartitionNum) is 8, NOT the core count: Spark's
+    // core-derived default shreds an 11 MB page-cached parquet into 32
+    // ~350 KB splits at local[32] — pure scheduling overhead. 8 is the
+    // measured knee (full suite 261→225 s at local[32]; byte-derived 1
+    // measured WORSE — per-row scan compute needs the parallelism), and
+    // it is core-count-independent, so the 8-core scaling run sees the
+    // same floor. [[clusterConf]] overrides it with the total core count
+    // (on a fleet a small input should still engage every executor; at
+    // 100 TB the byte-derived split count dwarfs any floor), and [[tune]]
+    // lets GRAFT_SCAN_MIN_PARTITIONS override it for an A/B rerun.
+    "spark.sql.files.minPartitionNum" -> "8",
     "spark.sql.legacy.parquet.nanosAsLong" -> "true",
     // fixtures store timestamp[us] with isAdjustedToUTC=false; Spark 4
     // would infer TIMESTAMP_NTZ, which (a) rejects unix_micros and (b)
@@ -71,7 +59,8 @@ object Sessions {
     conf.foldLeft(b) { case (bb, (k, v)) => bb.config(k, v) }
 
   def tune(b: SparkSession.Builder, cores: String): SparkSession.Builder =
-    applyConf(b, tuneConf(cores))
+    applyConf(b, tuneConf(cores) ++
+      sys.env.get("GRAFT_SCAN_MIN_PARTITIONS").map("spark.sql.files.minPartitionNum" -> _))
 
   def local(appName: String, cores: Int = 4): SparkSession = {
     val s = tune(SparkSession.builder().master(s"local[$cores]").appName(appName), cores.toString)

@@ -368,13 +368,18 @@ object GraphOps extends QueryModule {
       val ne = edges.count()
       math.ceil(kCoreFactor * ((2L * ne).toDouble / alive.length)).toLong
     }
-    def coreDegrees(aliveSet: Array[Long]) = {
+    // `use` consumes the degrees eagerly: the alive-set broadcast is
+    // destroyed as soon as it returns, so a long session keeps none of
+    // the per-round copies
+    def coreDegrees[T](aliveSet: Array[Long])(
+        use: org.apache.spark.rdd.RDD[(Long, Long)] => T): T = {
       val bset = sc.broadcast(aliveSet)
-      edges.filter { case (a, b) =>
+      try use(edges.filter { case (a, b) =>
         java.util.Arrays.binarySearch(bset.value, a) >= 0 &&
           java.util.Arrays.binarySearch(bset.value, b) >= 0
       }.flatMap { case (a, b) => Iterator((a, 1L), (b, 1L)) }
-        .reduceByKey(_ + _)
+        .reduceByKey(_ + _))
+      finally bset.destroy()
     }
     // alive sets shrink monotonically, so an unchanged count IS the
     // fixpoint — stop early rather than burn the remaining no-op rounds
@@ -384,14 +389,14 @@ object GraphOps extends QueryModule {
     var r = 0
     while (r < rounds && prev != alive.length && alive.length != 0) {
       prev = alive.length
-      alive = coreDegrees(alive)
-        .filter { case (_, d) => d >= k }.keys.collect().sorted
+      alive = coreDegrees(alive)(
+        _.filter { case (_, d) => d >= k }.keys.collect().sorted)
       r += 1
     }
     // materialize the census into the DF world (eager localCheckpoint,
     // |V|-bounded) BEFORE releasing the cached edges — the CC pattern
-    val census = s.createDataFrame(coreDegrees(alive))
-      .toDF("partkey", "core_deg").localCheckpoint(true)
+    val census = coreDegrees(alive)(d =>
+      s.createDataFrame(d).toDF("partkey", "core_deg").localCheckpoint(true))
     edges.unpersist(blocking = false)
     census
       .orderBy(col("core_deg").desc, col("partkey"))

@@ -4,8 +4,8 @@ import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
-import org.apache.spark.sql.types.LongType
+import org.apache.spark.sql.streaming.{StreamingQueryProgress, Trigger}
+import org.apache.spark.sql.types.{LongType, StructType}
 
 import graft.functions.Scalars._
 import graft.operators.{QueryModule, RegisteredQuery}
@@ -61,51 +61,29 @@ object StreamingOps extends QueryModule {
       case LongType => raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
       case _        => raw
     }
-    val name = s"graft_stream_w3_${sinkSeq.incrementAndGet()}"
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-stream-w3-ckpt")
-    // ~120 six-hour windows of state: the 4-partition sizing (see
-    // withShufflePartitions) applies here like every stateful entry —
-    // this was the one streaming query still paying 32 store lifecycles.
-    // start()+awaitTermination both inside the conf scope, the idiom
-    // every other streaming entry uses (ADVICE r12 — the narrower
-    // start()-only scope was safe only via StreamExecution's
-    // clone-at-construction conf snapshot, an implicit dependency)
-    withShufflePartitions(s, 4) {
-      val q = ev
-        .groupBy(window(col("ts"), "6 hours"))
+    // ~120 six-hour windows of state: the 4-partition sizing applies
+    // here like every stateful entry
+    val out = runAvailableNow(s, "w3", statePartitions,
+        Sink.Memory("complete", Some(windowRows))) {
+      ev.groupBy(window(col("ts"), "6 hours"))
         .agg(count(lit(1)).as("n_events"), sum(col("value")).as("sum_value"))
-        .writeStream
-        .outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", ckpt.toString)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      // the try/finally detaches from the sink so the temp view and
-      // checkpoint can be dropped even when the run FAILS (warm bench
-      // loops would otherwise accumulate one resident Complete-mode
-      // result table + one /tmp checkpoint per invocation); the window
-      // count is time-bounded, so the local copy is small
-      try {
-        q.awaitTermination()
-        val shaped = s.table(name)
-          .select(
-            unix_micros(col("window.start")).as("w_start_us"),
-            unix_micros(col("window.end")).as("w_end_us"),
-            col("n_events"),
-            roundTo(col("sum_value"), 2).as("sum_value"))
-          .orderBy("w_start_us")
-        val out = s.createDataFrame(shaped.collectAsList(), shaped.schema)
-        // a source that listed zero files completes "successfully" with an
-        // empty sink — fail loudly instead of returning a vacuous result
-        require(!out.isEmpty, s"streaming source matched no input under $path")
-        out
-      } finally {
-        scala.util.Try(s.catalog.dropTempView(name))
-        deleteRecursively(ckpt)
-      }
-    }
+    }.out
+    // a source that listed zero files completes "successfully" with an
+    // empty sink — fail loudly instead of returning a vacuous result
+    require(!out.isEmpty, s"streaming source matched no input under $path")
+    out
   }
+
+  /** The batch twin's output shape over a `window`/`n_events`/`sum_value`
+    * sink — shared by the Complete and the append-mode tumbling windows.
+    */
+  private def windowRows(sink: DataFrame): DataFrame =
+    sink.select(
+        unix_micros(col("window.start")).as("w_start_us"),
+        unix_micros(col("window.end")).as("w_end_us"),
+        col("n_events"),
+        roundTo(col("sum_value"), 2).as("sum_value"))
+      .orderBy("w_start_us")
 
   /** Same oracle as the batch twin — the streaming run must land on the
     * identical window grid and aggregates.
@@ -118,23 +96,22 @@ object StreamingOps extends QueryModule {
       |FROM (SELECT CAST(floor(epoch(ts) / 21600) * 21600 AS BIGINT) AS b, value FROM events)
       |GROUP BY b ORDER BY w_start_us""".stripMargin
 
-  /** Run `body` with `spark.sql.shuffle.partitions` temporarily lowered:
-    * a stateful streaming query materializes ONE state-store instance
-    * (plus its per-batch checkpoint delta files) per shuffle partition,
-    * so the session default of 32 pays 32 store lifecycles × every
-    * micro-batch for fixture-sized state — measured as the dominant cost
-    * of `stream_sessionize` (VERDICT r8 #5; r10 lowered 8 → 4 after the
+  /** The shuffle width every stateful entry runs at: a stateful
+    * streaming query materializes ONE state-store instance (plus its
+    * per-batch checkpoint delta files) per shuffle partition, so the
+    * session default of 32 pays 32 store lifecycles × every micro-batch
+    * for fixture-sized state — measured as the dominant cost of
+    * `stream_sessionize` (first lowered to 8, then to 4 once the
     * staged-input memo left store lifecycle as the remaining fixed cost).
     * 4 partitions is still a real exchange (parallel state, multiple
     * tasks); at 100 TB the partition count is sized to the cluster like
     * any shuffle — that arithmetic is [[graft.engine.Sessions.streamingStateConf]].
     * The value is pinned into the query's checkpoint at start, so
-    * restoring the conf after `body` can't re-plan a running query.
+    * restoring the conf after the run can't re-plan a running query.
     */
-  private def withShufflePartitions[T](s: SparkSession, n: Int)(body: => T): T =
-    withConfs(s, Map("spark.sql.shuffle.partitions" -> n.toString))(body)
+  private val statePartitions = Map("spark.sql.shuffle.partitions" -> "4")
 
-  /** [[withShufflePartitions]] plus `noDataMicroBatches` OFF — for the
+  /** [[statePartitions]] plus `noDataMicroBatches` OFF — for the
     * watermarked queries whose FINAL emission already rides a staged
     * trailing DATA batch (sentinels). Where the watermark still advances
     * at the END of the last data batch, AvailableNow appends a no-data
@@ -149,14 +126,19 @@ object StreamingOps extends QueryModule {
     * eviction-driving batch explicitly, which the oracles then prove
     * (a missing final emission breaks rows_match loudly).
     */
-  private def withStreamBatchConfs[T](s: SparkSession, n: Int)(body: => T): T =
-    withConfs(s, Map(
-      "spark.sql.shuffle.partitions" -> n.toString,
-      "spark.sql.streaming.noDataMicroBatches.enabled" -> "false"))(body)
+  private val noTrailingBatch = statePartitions +
+    ("spark.sql.streaming.noDataMicroBatches.enabled" -> "false")
+
+  /** [[statePartitions]] under the RocksDB state-store provider — every
+    * `transformWithState` entry needs it (the API rejects the
+    * HDFS-backed provider by design).
+    */
+  private val rocksState = statePartitions +
+    ("spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
 
   /** Set session confs for the duration of `body`, restoring (or
-    * unsetting) each afterwards — the [[withShufflePartitions]] contract
-    * generalized to any conf set.
+    * unsetting) each afterwards.
     *
     * CONCURRENCY CONTRACT (ADVICE r13): the set→run→restore window
     * mutates SHARED SparkSession confs, so any query planned
@@ -171,15 +153,6 @@ object StreamingOps extends QueryModule {
     * because a cloned session would also clone the StreamingQueryManager
     * and detach the memory-sink temp views the oracles read.
     */
-  /** RocksDB state-store provider, conf-scoped — every
-    * `transformWithState` entry needs it (the API rejects the
-    * HDFS-backed provider by design). Single-sourced so the three TWS
-    * call sites share one restore idiom instead of hand-rolled copies.
-    */
-  private val rocksProviderConf = Map(
-    "spark.sql.streaming.stateStore.providerClass" ->
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-
   private def withConfs[T](s: SparkSession, confs: Map[String, String])(body: => T): T = {
     val old = confs.keys.map(k => k -> s.conf.getOption(k)).toMap
     confs.foreach { case (k, v) => s.conf.set(k, v) }
@@ -187,6 +160,87 @@ object StreamingOps extends QueryModule {
       case (k, Some(v)) => s.conf.set(k, v)
       case (k, None)    => s.conf.unset(k)
     }
+  }
+
+  /** A scratch directory `graft-<tag>*` that lives exactly as long as
+    * `body` — deleted on success and on failure.
+    */
+  private def withTempDir[T](tag: String)(body: java.nio.file.Path => T): T = {
+    val dir = java.nio.file.Files.createTempDirectory(s"graft-$tag")
+    // single-sourced with the staged-root eviction: per-module copies of
+    // recursive delete drift (one forgot to close the walk)
+    try body(dir) finally graft.engine.StagedRoots.deleteRecursively(dir)
+  }
+
+  /** Where an AvailableNow run writes. */
+  private[graft] sealed trait Sink
+  private[graft] object Sink {
+    /** The memory sink in output `mode`; `copyOut` shapes the sink table
+      * into the rows handed back (None: the run is kept for its progress
+      * or its checkpoint only).
+      */
+    final case class Memory(mode: String,
+        copyOut: Option[DataFrame => DataFrame] = None) extends Sink
+    /** `foreachBatch(fn)` in append mode. */
+    final case class Batches(fn: (DataFrame, Long) => Unit) extends Sink
+    /** `toTable(name)` in append mode. */
+    final case class Table(name: String) extends Sink
+  }
+
+  /** A finished run: the memory sink's rows copied out (when the sink
+    * asked for it) and the query's `recentProgress`.
+    */
+  private[graft] final case class Ran(copied: Option[DataFrame],
+      progress: Array[StreamingQueryProgress]) {
+    def out: DataFrame = copied.getOrElse(sys.error("the run copied no rows out"))
+    /** Micro-batches that read input — what the multi-batch gates pin. */
+    def dataBatches: Int = progress.count(_.numInputRows > 0)
+  }
+
+  /** THE AvailableNow lifecycle every streaming entry runs through.
+    * Inside the `confs` scope it builds `stream`, starts it into `sink`
+    * under a unique `graft_stream_<tag>_<n>` name with an AvailableNow
+    * trigger, awaits termination and copies a memory sink's rows out
+    * (the sink is time- or key-bounded, so the local copy is small).
+    * Cleanup runs on success AND failure — the query is stopped, the
+    * memory-sink view dropped and a checkpoint the runner created
+    * deleted — so warm bench loops accumulate neither resident result
+    * tables nor temp checkpoints, and an analysis error at `start()`
+    * leaks nothing either. A caller whose checkpoint must outlive one
+    * run (a second drain resumes from it; the state data source reads it
+    * later) passes `checkpoint` and owns its deletion.
+    */
+  private[graft] def runAvailableNow(s: SparkSession, tag: String,
+      confs: Map[String, String], sink: Sink,
+      checkpoint: Option[String] = None)(stream: => DataFrame): Ran = {
+    def run(ckpt: String): Ran = withConfs(s, confs) {
+      val name = s"graft_stream_${tag}_${sinkSeq.incrementAndGet()}"
+      val w = stream.writeStream
+        .trigger(Trigger.AvailableNow())
+        .option("checkpointLocation", ckpt)
+      // a start() that throws leaves no query behind; the checkpoint
+      // still goes with the enclosing scope
+      val q = sink match {
+        case Sink.Memory(mode, _) =>
+          w.outputMode(mode).format("memory").queryName(name).start()
+        case Sink.Batches(fn) => w.outputMode("append").foreachBatch(fn).start()
+        case Sink.Table(t)    => w.outputMode("append").toTable(t)
+      }
+      try {
+        q.awaitTermination()
+        val copied = sink match {
+          case Sink.Memory(_, Some(shape)) =>
+            val shaped = shape(s.table(name))
+            Some(s.createDataFrame(shaped.collectAsList(), shaped.schema))
+          case _ => None
+        }
+        Ran(copied, q.recentProgress)
+      } finally {
+        scala.util.Try(q.stop())
+        if (sink.isInstanceOf[Sink.Memory]) scala.util.Try(s.catalog.dropTempView(name))
+      }
+    }
+    checkpoint.fold(withTempDir(s"stream-$tag-ckpt")(c => run(c.toString)))(run)
   }
 
   /** Move the parquet part files of `src` into the stream-source input
@@ -217,12 +271,9 @@ object StreamingOps extends QueryModule {
     * then [[moveParts]] them in.
     */
   private def stage(df: DataFrame, inDir: java.nio.file.Path, name: String,
-      mtimeMs: Long = -1L): Unit = {
-    val scratch = java.nio.file.Files.createTempDirectory(s"graft-stage-$name")
-    try {
-      df.write.mode("overwrite").parquet(scratch.toString)
-      moveParts(scratch.toFile, inDir, name, mtimeMs)
-    } finally deleteRecursively(scratch)
+      mtimeMs: Long = -1L): Unit = withTempDir(s"stage-$name") { scratch =>
+    df.write.mode("overwrite").parquet(scratch.toString)
+    moveParts(scratch.toFile, inDir, name, mtimeMs)
   }
 
   /** Stage SEVERAL label-split slices of one DataFrame in a single job:
@@ -242,17 +293,15 @@ object StreamingOps extends QueryModule {
     * stream-stream join) from one scan of the fixture.
     */
   private def stageSplitsTo(df: DataFrame, labelCol: String,
-      labelTo: Map[String, (java.nio.file.Path, Long)]): Unit = {
-    val scratch = java.nio.file.Files.createTempDirectory("graft-stage-splits")
-    try {
+      labelTo: Map[String, (java.nio.file.Path, Long)]): Unit =
+    withTempDir("stage-splits") { scratch =>
       df.repartition(col(labelCol))
         .write.partitionBy(labelCol).mode("overwrite").parquet(scratch.toString)
       labelTo.foreach { case (label, (dir, mtime)) =>
         moveParts(new java.io.File(scratch.toFile, s"$labelCol=$label"),
           dir, label, mtime)
       }
-    } finally deleteRecursively(scratch)
-  }
+    }
 
   /** Streaming ingest THROUGH the DSv2 API connector — the reference's
     * poll-and-page loop run by the streaming engine itself
@@ -266,41 +315,24 @@ object StreamingOps extends QueryModule {
     * DuckDB twin recomputes the same aggregate from `range()` — the
     * whole offset/admission/partition-planning path must round-trip
     * exactly or the hash diverges. State partitions follow the
-    * [[withShufflePartitions]] sizing (97 mission groups need a real
+    * [[statePartitions]] sizing (97 mission groups need a real
     * exchange, not 32 store lifecycles per batch).
     */
   def streamApiIngest(s: SparkSession, dir: String): DataFrame = {
-    val name = s"graft_stream_api_${sinkSeq.incrementAndGet()}"
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-stream-api-ckpt")
-    withShufflePartitions(s, 4) {
-      val q = s.readStream.format("graft.sources.LaunchApiSource")
+    val ran = runAvailableNow(s, "api", statePartitions,
+        Sink.Memory("complete", Some(_.orderBy("mission_name")))) {
+      s.readStream.format("graft.sources.LaunchApiSource")
         .option("rows", 1000).option("pageSize", 100)
         .option("maxRowsPerTrigger", 334)
         .load()
         .groupBy(col("mission_name"))
         .agg(count(lit(1)).as("n_launches"),
           roundTo(sum(col("payload_mass_kg")), 2).as("mass_sum"))
-        .writeStream
-        .outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", ckpt.toString)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      try {
-        q.awaitTermination()
-        val dataBatches = q.recentProgress.count(_.numInputRows > 0)
-        require(dataBatches >= 3,
-          s"admission control must split the ingest into >=3 batches, got $dataBatches")
-        val shaped = s.table(name).orderBy("mission_name")
-        val out = s.createDataFrame(shaped.collectAsList(), shaped.schema)
-        require(out.count() == 97, s"expected 97 missions, got ${out.count()}")
-        out
-      } finally {
-        scala.util.Try(s.catalog.dropTempView(name))
-        deleteRecursively(ckpt)
-      }
     }
+    require(ran.dataBatches >= 3,
+      s"admission control must split the ingest into >=3 batches, got ${ran.dataBatches}")
+    require(ran.out.count() == 97, s"expected 97 missions, got ${ran.out.count()}")
+    ran.out
   }
 
   val streamApiIngestOracle: String =
@@ -310,11 +342,6 @@ object StreamingOps extends QueryModule {
       |   ELSE (i % 22801) * CAST(0.7 AS DOUBLE) END) * 1e2 + 0.5) / 1e2 AS mass_sum
       |FROM range(0, 1000) t(i)
       |GROUP BY 1 ORDER BY mission_name""".stripMargin
-
-  // single-sourced with the staged-root eviction (review r12: per-module
-  // copies of recursive delete drift — one forgot to close the walk)
-  private def deleteRecursively(root: java.nio.file.Path): Unit =
-    graft.engine.StagedRoots.deleteRecursively(root)
 
   /** Staged-INPUT memo (VERDICT r9 #4, the streaming fixed-cost trim):
     * each stream query's staged source files are fixture plumbing — a
@@ -341,6 +368,26 @@ object StreamingOps extends QueryModule {
           graft.operators.SimilarityIndex.fingerprint(fixtureDir, table)) { r =>
           build(java.nio.file.Paths.get(r))
         })
+  }
+
+  /** The events feed (rows with a user, `cols` only) split into three
+    * micro-batch files by `event_id % 3` with pinned, increasing mtimes,
+    * staged once per fixture as `layout`. Queries naming the same layout
+    * share one staged directory, so they must name the same `cols`.
+    * Returns the directory with the files' schema.
+    */
+  private def thirdsInput(s: SparkSession, dir: String, layout: String,
+      cols: String*): (java.nio.file.Path, StructType) = {
+    val ev = graft.engine.Tables.events(s, dir)
+      .filter(col("user_id").isNotNull)
+      .select(cols.map(col): _*)
+      .withColumn("b", (col("event_id") % 3).cast("string"))
+    val inDir = StagedLayouts.dir(layout, dir) { in =>
+      val t0 = 1700000000000L
+      stageSplits(ev, "b", in,
+        Map("0" -> t0, "1" -> (t0 + 60000L), "2" -> (t0 + 120000L)))
+    }
+    (inDir, ev.drop("b").schema)
   }
 
   /** The production streaming-aggregate shape the Complete-mode twin
@@ -392,37 +439,16 @@ object StreamingOps extends QueryModule {
       stage(s.range(1).select((lit(maxTs) + expr("INTERVAL 48 HOURS")).as("ts"),
         lit(0.0d).as("value")), in, "s3", t0 + 2000)
     }
-    val root = java.nio.file.Files.createTempDirectory("graft-stream-append")
-    try {
-      val name = s"graft_stream_wa_${sinkSeq.incrementAndGet()}"
-      withStreamBatchConfs(s, 4) {
-        val q = s.readStream.schema(ev.schema)
-          .option("maxFilesPerTrigger", 1).parquet(inDir.toString)
-          .withWatermark("ts", "1 hour")
-          .groupBy(window(col("ts"), "6 hours"))
-          .agg(count(lit(1)).as("n_events"), sum(col("value")).as("sum_value"))
-          .writeStream
-          .outputMode("append")
-          .format("memory")
-          .queryName(name)
-          .option("checkpointLocation", root.resolve("ckpt").toString)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        try {
-          q.awaitTermination()
-          val shaped = s.table(name)
-            .select(
-              unix_micros(col("window.start")).as("w_start_us"),
-              unix_micros(col("window.end")).as("w_end_us"),
-              col("n_events"),
-              roundTo(col("sum_value"), 2).as("sum_value"))
-            .orderBy("w_start_us")
-          val out = s.createDataFrame(shaped.collectAsList(), shaped.schema)
-          require(!out.isEmpty, "append-mode stream emitted no windows")
-          out
-        } finally scala.util.Try(s.catalog.dropTempView(name))
-      }
-    } finally deleteRecursively(root)
+    val out = runAvailableNow(s, "wa", noTrailingBatch,
+        Sink.Memory("append", Some(windowRows))) {
+      s.readStream.schema(ev.schema)
+        .option("maxFilesPerTrigger", 1).parquet(inDir.toString)
+        .withWatermark("ts", "1 hour")
+        .groupBy(window(col("ts"), "6 hours"))
+        .agg(count(lit(1)).as("n_events"), sum(col("value")).as("sum_value"))
+    }.out
+    require(!out.isEmpty, "append-mode stream emitted no windows")
+    out
   }
 
   /** Streaming twin of exact dedup ([[graft.operators.Dedup]] S-family):
@@ -474,39 +500,22 @@ object StreamingOps extends QueryModule {
             .otherwise(array(lit("f2")))).as("__b")),
         "__b", in, Map("f1" -> t0, "f2" -> (t0 + 1000), "d3" -> (t0 + 2000)))
     }
-    val root = java.nio.file.Files.createTempDirectory("graft-stream-dedup")
-    try {
-      val name = s"graft_stream_dedup_${sinkSeq.incrementAndGet()}"
-      withStreamBatchConfs(s, 4) {
-        val q = s.readStream.schema(ev.schema)
-          .option("maxFilesPerTrigger", 2).parquet(inDir.toString)
-          .withWatermark("ts", "35 days")
-          .dropDuplicatesWithinWatermark("event_id")
-          .writeStream
-          .outputMode("append")
-          .format("memory")
-          .queryName(name)
-          .option("checkpointLocation", root.resolve("ckpt").toString)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        try {
-          q.awaitTermination()
-          // the replay MUST arrive in a later batch than its first-seen
-          // twin — a single-batch run would dedup in-batch, not through
-          // the state store, and the gate would be vacuous
-          val dataBatches = q.recentProgress.count(_.numInputRows > 0)
-          require(dataBatches >= 2,
-            s"dedup replay must cross a batch boundary, got $dataBatches batches")
-          val shaped = s.table(name)
-            .select(col("event_id"), unix_micros(col("ts")).as("ts_us"),
-              roundTo(col("value"), 2).as("value"))
-            .orderBy("event_id")
-          val out = s.createDataFrame(shaped.collectAsList(), shaped.schema)
-          require(!out.isEmpty, "streaming dedup emitted no rows")
-          out
-        } finally scala.util.Try(s.catalog.dropTempView(name))
-      }
-    } finally deleteRecursively(root)
+    val ran = runAvailableNow(s, "dedup", noTrailingBatch,
+        Sink.Memory("append", Some(_.select(col("event_id"),
+          unix_micros(col("ts")).as("ts_us"), roundTo(col("value"), 2).as("value"))
+          .orderBy("event_id")))) {
+      s.readStream.schema(ev.schema)
+        .option("maxFilesPerTrigger", 2).parquet(inDir.toString)
+        .withWatermark("ts", "35 days")
+        .dropDuplicatesWithinWatermark("event_id")
+    }
+    // the replay MUST arrive in a later batch than its first-seen twin —
+    // a single-batch run would dedup in-batch, not through the state
+    // store, and the gate would be vacuous
+    require(ran.dataBatches >= 2,
+      s"dedup replay must cross a batch boundary, got ${ran.dataBatches} batches")
+    require(!ran.out.isEmpty, "streaming dedup emitted no rows")
+    ran.out
   }
 
   /** Full distinct event set — one output row per event_id, green only if
@@ -558,49 +567,33 @@ object StreamingOps extends QueryModule {
     }
     val clickDir = staged.resolve("clicks")
     val purchDir = staged.resolve("purchases")
-    val root = java.nio.file.Files.createTempDirectory("graft-stream-ssjoin")
-    try {
-      val ioSchema = base.drop("__b").schema
-
-      val name = s"graft_stream_ssj_${sinkSeq.incrementAndGet()}"
-      // noDataMicroBatches off (r13, the outer joins' existing setting):
-      // an INNER stream-stream join emits only on data batches and this
-      // query needs no eviction pass, so AvailableNow's trailing no-data
-      // batch re-committed all four state stores for zero output — one
-      // whole batch of fixed micro-batch cost for nothing.
-      withStreamBatchConfs(s, 4) {
-        val cs = s.readStream.schema(ioSchema).parquet(clickDir.toString)
-          .select(col("event_id").as("click_id"), col("user_id"),
-            col("ts").as("click_ts"))
-          .withWatermark("click_ts", "35 days")
-        val ps = s.readStream.schema(ioSchema)
-          .option("maxFilesPerTrigger", 1).parquet(purchDir.toString)
-          .select(col("event_id").as("purchase_id"),
-            col("user_id").as("p_user_id"), col("ts").as("purchase_ts"))
-          .withWatermark("purchase_ts", "35 days")
-        val q = cs.join(ps,
-            col("user_id") === col("p_user_id") &&
-              col("purchase_ts") >= col("click_ts") &&
-              col("purchase_ts") <= col("click_ts") + expr("INTERVAL 4 HOURS"))
-          .select(col("click_id"), col("purchase_id"), col("user_id"),
-            unix_micros(col("click_ts")).as("click_ts_us"),
-            unix_micros(col("purchase_ts")).as("purchase_ts_us"))
-          .writeStream
-          .outputMode("append")
-          .format("memory")
-          .queryName(name)
-          .option("checkpointLocation", root.resolve("ckpt").toString)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        try {
-          q.awaitTermination()
-          val shaped = s.table(name).orderBy("click_id", "purchase_id")
-          val out = s.createDataFrame(shaped.collectAsList(), shaped.schema)
-          require(!out.isEmpty, "stream-stream join emitted no pairs")
-          out
-        } finally scala.util.Try(s.catalog.dropTempView(name))
-      }
-    } finally deleteRecursively(root)
+    val ioSchema = base.drop("__b").schema
+    // noDataMicroBatches off (as on the outer joins): an
+    // INNER stream-stream join emits only on data batches and this query
+    // needs no eviction pass, so AvailableNow's trailing no-data batch
+    // re-committed all four state stores for zero output — one whole
+    // batch of fixed micro-batch cost for nothing.
+    val out = runAvailableNow(s, "ssj", noTrailingBatch,
+        Sink.Memory("append", Some(_.orderBy("click_id", "purchase_id")))) {
+      val cs = s.readStream.schema(ioSchema).parquet(clickDir.toString)
+        .select(col("event_id").as("click_id"), col("user_id"),
+          col("ts").as("click_ts"))
+        .withWatermark("click_ts", "35 days")
+      val ps = s.readStream.schema(ioSchema)
+        .option("maxFilesPerTrigger", 1).parquet(purchDir.toString)
+        .select(col("event_id").as("purchase_id"),
+          col("user_id").as("p_user_id"), col("ts").as("purchase_ts"))
+        .withWatermark("purchase_ts", "35 days")
+      cs.join(ps,
+          col("user_id") === col("p_user_id") &&
+            col("purchase_ts") >= col("click_ts") &&
+            col("purchase_ts") <= col("click_ts") + expr("INTERVAL 4 HOURS"))
+        .select(col("click_id"), col("purchase_id"), col("user_id"),
+          unix_micros(col("click_ts")).as("click_ts_us"),
+          unix_micros(col("purchase_ts")).as("purchase_ts_us"))
+    }.out
+    require(!out.isEmpty, "stream-stream join emitted no pairs")
+    out
   }
 
   /** The batch interval join — the streaming result must be exactly this
@@ -704,68 +697,51 @@ object StreamingOps extends QueryModule {
     }
     val clickDir = staged.resolve("clicks")
     val purchDir = staged.resolve("purchases")
-    val root = java.nio.file.Files.createTempDirectory("graft-stream-loj")
-    try {
-      val ioSchema = base.drop("__b").schema
-
-      val name = s"graft_stream_loj_${sinkSeq.incrementAndGet()}"
-      // 4 state partitions: StreamProbe r12 re-measured the knee — the
-      // join buffers ~29k click/purchase state rows in batch 1, and at 2
-      // partitions addBatch is task-parallelism-starved (3.0 s total vs
-      // 2.6 s at 4; 8 partitions tips back to store-lifecycle overhead,
-      // 3.1 s). At 100 TB this knob is Sessions.streamingStateConf's
-      // sizing arithmetic, not a constant.
-      // The trailing no-data micro-batch is disabled because the staged
-      // p4 DATA batch is what runs the eviction pass (see scaladoc) —
-      // the extra empty batch re-committed every store for no emission
-      // (VERDICT r10 #3; the oracle, not timing, gates the semantics).
-      withStreamBatchConfs(s, 4) {
-        val cs = s.readStream.schema(ioSchema)
-          .option("maxFilesPerTrigger", 1).parquet(clickDir.toString)
-          .select(col("event_id").as("click_id"), col("user_id"),
-            col("ts").as("click_ts"))
-          .withWatermark("click_ts", "1 hour")
-        val ps = s.readStream.schema(ioSchema)
-          .option("maxFilesPerTrigger", 1).parquet(purchDir.toString)
-          .select(col("event_id").as("purchase_id"),
-            col("user_id").as("p_user_id"), col("ts").as("purchase_ts"))
-          .withWatermark("purchase_ts", "1 hour")
-        val q = cs.join(ps,
-            col("user_id") === col("p_user_id") &&
-              col("purchase_ts") >= col("click_ts") &&
-              col("purchase_ts") <= col("click_ts") + expr("INTERVAL 4 HOURS"),
-            joinType)
-          // coalesce is the identity for leftOuter (click side never null)
-          // and fills the unmatched-purchase rows for fullOuter
-          .select(col("click_id"), col("purchase_id"),
-            coalesce(col("user_id"), col("p_user_id")).as("user_id"),
-            unix_micros(col("click_ts")).as("click_ts_us"),
-            unix_micros(col("purchase_ts")).as("purchase_ts_us"))
-          .writeStream
-          .outputMode("append")
-          .format("memory")
-          .queryName(name)
-          .option("checkpointLocation", root.resolve("ckpt").toString)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        try {
-          q.awaitTermination()
-          val shaped = s.table(name)
-            .filter(col("user_id") >= 0)
-            .orderBy(coalesce(col("click_id"), lit(-1L)),
-              coalesce(col("purchase_id"), lit(-1L)))
-          val out = s.createDataFrame(shaped.collectAsList(), shaped.schema)
-          require(out.where(col("purchase_id").isNull).count() > 0,
-            "outer stream join evicted no unmatched clicks — watermark never flushed state")
-          require(out.where(col("purchase_id").isNotNull).count() > 0,
-            "outer stream join matched no pairs")
-          if (joinType == "fullOuter")
-            require(out.where(col("click_id").isNull).count() > 0,
-              "full-outer stream join evicted no unmatched purchases")
-          out
-        } finally scala.util.Try(s.catalog.dropTempView(name))
-      }
-    } finally deleteRecursively(root)
+    val ioSchema = base.drop("__b").schema
+    // 4 state partitions: StreamProbe measured the knee — the
+    // join buffers ~29k click/purchase state rows in batch 1, and at 2
+    // partitions addBatch is task-parallelism-starved (3.0 s total vs
+    // 2.6 s at 4; 8 partitions tips back to store-lifecycle overhead,
+    // 3.1 s). At 100 TB this knob is Sessions.streamingStateConf's
+    // sizing arithmetic, not a constant.
+    // The trailing no-data micro-batch is disabled because the staged
+    // p4 DATA batch is what runs the eviction pass (see scaladoc) — the
+    // extra empty batch re-committed every store for no emission
+    // (the oracle, not timing, gates the semantics).
+    val out = runAvailableNow(s, "loj", noTrailingBatch,
+        Sink.Memory("append", Some(_.filter(col("user_id") >= 0)
+          .orderBy(coalesce(col("click_id"), lit(-1L)),
+            coalesce(col("purchase_id"), lit(-1L)))))) {
+      val cs = s.readStream.schema(ioSchema)
+        .option("maxFilesPerTrigger", 1).parquet(clickDir.toString)
+        .select(col("event_id").as("click_id"), col("user_id"),
+          col("ts").as("click_ts"))
+        .withWatermark("click_ts", "1 hour")
+      val ps = s.readStream.schema(ioSchema)
+        .option("maxFilesPerTrigger", 1).parquet(purchDir.toString)
+        .select(col("event_id").as("purchase_id"),
+          col("user_id").as("p_user_id"), col("ts").as("purchase_ts"))
+        .withWatermark("purchase_ts", "1 hour")
+      cs.join(ps,
+          col("user_id") === col("p_user_id") &&
+            col("purchase_ts") >= col("click_ts") &&
+            col("purchase_ts") <= col("click_ts") + expr("INTERVAL 4 HOURS"),
+          joinType)
+        // coalesce is the identity for leftOuter (click side never null)
+        // and fills the unmatched-purchase rows for fullOuter
+        .select(col("click_id"), col("purchase_id"),
+          coalesce(col("user_id"), col("p_user_id")).as("user_id"),
+          unix_micros(col("click_ts")).as("click_ts_us"),
+          unix_micros(col("purchase_ts")).as("purchase_ts_us"))
+    }.out
+    require(out.where(col("purchase_id").isNull).count() > 0,
+      "outer stream join evicted no unmatched clicks — watermark never flushed state")
+    require(out.where(col("purchase_id").isNotNull).count() > 0,
+      "outer stream join matched no pairs")
+    if (joinType == "fullOuter")
+      require(out.where(col("click_id").isNull).count() > 0,
+        "full-outer stream join evicted no unmatched purchases")
+    out
   }
 
   /** The batch LEFT JOIN — nulls order with the same coalesce(-1) key the
@@ -816,10 +792,9 @@ object StreamingOps extends QueryModule {
     * Scale: the merge shuffles once per micro-batch on the key
     * (`mergeByKey`); file staging is fixture plumbing, not dataflow.
     */
-  def streamMergeUpsert(s: SparkSession, dir: String): DataFrame = {
-    val root = java.nio.file.Files.createTempDirectory("graft-stream-merge")
-    val inDir = java.nio.file.Files.createDirectories(root.resolve("in"))
-    try {
+  def streamMergeUpsert(s: SparkSession, dir: String): DataFrame =
+    withTempDir("stream-merge") { root =>
+      val inDir = java.nio.file.Files.createDirectories(root.resolve("in"))
       val base = graft.engine.Tables.events(s, dir)
         .filter(graft.pipeline.IncrementalPipeline.isValid)
         .select(col("event_id"), col("ts"), col("value"))
@@ -827,7 +802,7 @@ object StreamingOps extends QueryModule {
       val ckpt = root.resolve("ckpt").toString
 
       stage(base, inDir, "b0")
-      val ran1 = withShufflePartitions(s, 4) {
+      val ran1 = withConfs(s, statePartitions) {
         StreamingPipeline.runAvailableNow(s, base.schema, inDir.toString, store, ckpt)
       }
       require(ran1 >= 1, "initial streaming round processed no micro-batch")
@@ -835,7 +810,7 @@ object StreamingOps extends QueryModule {
         sys.error("initial streaming round wrote no store version"))
 
       stage(graft.operators.MergeOps.s7Incoming(base), inDir, "b1")
-      val ran2 = withShufflePartitions(s, 4) {
+      val ran2 = withConfs(s, statePartitions) {
         StreamingPipeline.runAvailableNow(s, base.schema, inDir.toString, store, ckpt)
       }
       require(ran2 >= 1, "incremental streaming round processed no micro-batch " +
@@ -851,8 +826,7 @@ object StreamingOps extends QueryModule {
         .crossJoin(graft.operators.MergeOps.newKeyCount(baseStored, merged, "event_id"))
       // materialize before the temp store is deleted
       s.createDataFrame(digest.collectAsList(), digest.schema)
-    } finally deleteRecursively(root)
-  }
+    }
 
   /** [[graft.operators.MergeOps.s7Oracle]] over the VALIDATED feed — the
     * WHERE mirrors [[graft.pipeline.IncrementalPipeline.isValid]] exactly.
@@ -906,51 +880,24 @@ object StreamingOps extends QueryModule {
     * partials, same as the batch twin.
     */
   def streamUpdateCounts(s: SparkSession, dir: String): DataFrame = {
-    val ev = graft.engine.Tables.events(s, dir)
-      .filter(col("user_id").isNotNull)
-      .select(col("event_id"), col("user_id"), col("value"))
-      .withColumn("b", (col("event_id") % 3).cast("string"))
-    val inDir = StagedLayouts.dir("upd", dir) { in =>
-      val t0 = 1700000000000L
-      stageSplits(ev, "b", in,
-        Map("0" -> t0, "1" -> (t0 + 60000L), "2" -> (t0 + 120000L)))
+    val (inDir, srcSchema) = thirdsInput(s, dir, "upd", "event_id", "user_id", "value")
+    val ran = runAvailableNow(s, "upd", statePartitions,
+        Sink.Memory("update", Some(_.groupBy(col("user_id"))
+          .agg(
+            count(lit(1)).cast("long").as("n_updates"),
+            max(col("n")).as("final_n"),
+            roundTo(max_by(col("sum_v"), col("n")), 2).as("final_sum"))
+          .orderBy("user_id")))) {
+      s.readStream.schema(srcSchema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(inDir.toString)
+        .groupBy(col("user_id"))
+        .agg(count(lit(1)).as("n"), sum(col("value")).as("sum_v"))
     }
-    val root = java.nio.file.Files.createTempDirectory("graft-stream-upd")
-    try {
-      val name = s"graft_stream_upd_${sinkSeq.incrementAndGet()}"
-      val ckpt = root.resolve("ckpt")
-      val srcSchema = ev.drop("b").schema
-      withShufflePartitions(s, 4) {
-        val q = s.readStream.schema(srcSchema)
-          .option("maxFilesPerTrigger", 1)
-          .parquet(inDir.toString)
-          .groupBy(col("user_id"))
-          .agg(count(lit(1)).as("n"), sum(col("value")).as("sum_v"))
-          .writeStream
-          .outputMode("update")
-          .format("memory")
-          .queryName(name)
-          .option("checkpointLocation", ckpt.toString)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        try {
-          q.awaitTermination()
-          val dataBatches = q.recentProgress.count(_.numInputRows > 0)
-          require(dataBatches >= 3,
-            s"update-mode run must process >=3 micro-batches, got $dataBatches")
-          val shaped = s.table(name)
-            .groupBy(col("user_id"))
-            .agg(
-              count(lit(1)).cast("long").as("n_updates"),
-              max(col("n")).as("final_n"),
-              roundTo(max_by(col("sum_v"), col("n")), 2).as("final_sum"))
-            .orderBy("user_id")
-          val out = s.createDataFrame(shaped.collectAsList(), shaped.schema)
-          require(!out.isEmpty, s"update-mode source matched no input under $inDir")
-          out
-        } finally scala.util.Try(s.catalog.dropTempView(name))
-      }
-    } finally deleteRecursively(root)
+    require(ran.dataBatches >= 3,
+      s"update-mode run must process >=3 micro-batches, got ${ran.dataBatches}")
+    require(!ran.out.isEmpty, s"update-mode source matched no input under $inDir")
+    ran.out
   }
 
   /** Final state from the raw table; `n_updates` from the same event_id%3
@@ -985,65 +932,40 @@ object StreamingOps extends QueryModule {
     */
   def streamTwsTopk(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    // IDENTICAL staging expression to [[streamUpdateCounts]] on purpose:
-    // the two queries share one memoized "upd" layout (StagedLayouts keys
-    // by name, so the builders must agree). `value` is non-null in the
-    // fixtures; were that to change, the ANSI as[TwsIn] decode fails loudly.
-    val ev = graft.engine.Tables.events(s, dir)
-      .filter(col("user_id").isNotNull)
-      .select(col("event_id"), col("user_id"), col("value"))
-      .withColumn("b", (col("event_id") % 3).cast("string"))
-    val inDir = StagedLayouts.dir("upd", dir) { in =>
-      val t0 = 1700000000000L
-      stageSplits(ev, "b", in,
-        Map("0" -> t0, "1" -> (t0 + 60000L), "2" -> (t0 + 120000L)))
+    // the same "upd" layout AND columns as [[streamUpdateCounts]]: the
+    // layout is memoized by name, so every caller naming it must stage the
+    // same columns. `value` is non-null in the fixtures; were that to
+    // change, the ANSI as[TwsIn] decode fails loudly.
+    val (inDir, srcSchema) = thirdsInput(s, dir, "upd", "event_id", "user_id", "value")
+    val ran = runAvailableNow(s, "tws", rocksState,
+        Sink.Memory("update", Some(_.groupBy(col("user_id"))
+          .agg(
+            count(lit(1)).cast("long").as("n_updates"),
+            max(col("n_seen")).as("final_n"),
+            roundTo(max_by(col("v1"), col("n_seen")), 6).as("v1"),
+            roundTo(max_by(col("v2"), col("n_seen")), 6).as("v2"),
+            roundTo(max_by(col("v3"), col("n_seen")), 6).as("v3"))
+          .orderBy("user_id")))) {
+      s.readStream.schema(srcSchema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(inDir.toString)
+        .as[TwsIn]
+        .groupByKey(_.user_id)
+        .transformWithState(new TwsTopKProcessor(3),
+          org.apache.spark.sql.streaming.TimeMode.None(),
+          org.apache.spark.sql.streaming.OutputMode.Update())
+        .toDF()
     }
-    val root = java.nio.file.Files.createTempDirectory("graft-stream-tws")
-    try {
-      val name = s"graft_stream_tws_${sinkSeq.incrementAndGet()}"
-      val srcSchema = ev.drop("b").schema
-      withConfs(s, rocksProviderConf) { withShufflePartitions(s, 4) {
-        val q = s.readStream.schema(srcSchema)
-          .option("maxFilesPerTrigger", 1)
-          .parquet(inDir.toString)
-          .as[TwsIn]
-          .groupByKey(_.user_id)
-          .transformWithState(new TwsTopKProcessor(3),
-            org.apache.spark.sql.streaming.TimeMode.None(),
-            org.apache.spark.sql.streaming.OutputMode.Update())
-          .writeStream
-          .outputMode("update")
-          .format("memory")
-          .queryName(name)
-          .option("checkpointLocation", root.resolve("ckpt").toString)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        try {
-          q.awaitTermination()
-          val dataBatches = q.recentProgress.count(_.numInputRows > 0)
-          require(dataBatches >= 3,
-            s"transformWithState run must process >=3 micro-batches, got $dataBatches")
-          import scala.jdk.CollectionConverters._
-          val stateMetrics = q.recentProgress.toSeq
-            .flatMap(p => Option(p.stateOperators).toSeq.flatMap(_.toSeq))
-            .flatMap(_.customMetrics.keySet.asScala)
-          require(stateMetrics.exists(_.toLowerCase.contains("rocksdb")),
-            s"no rocksdb state metrics — provider fell back: $stateMetrics")
-          val shaped = s.table(name)
-            .groupBy(col("user_id"))
-            .agg(
-              count(lit(1)).cast("long").as("n_updates"),
-              max(col("n_seen")).as("final_n"),
-              roundTo(max_by(col("v1"), col("n_seen")), 6).as("v1"),
-              roundTo(max_by(col("v2"), col("n_seen")), 6).as("v2"),
-              roundTo(max_by(col("v3"), col("n_seen")), 6).as("v3"))
-            .orderBy("user_id")
-          val out = s.createDataFrame(shaped.collectAsList(), shaped.schema)
-          require(!out.isEmpty, s"transformWithState source matched no input under $inDir")
-          out
-        } finally scala.util.Try(s.catalog.dropTempView(name))
-      } }
-    } finally deleteRecursively(root)
+    require(ran.dataBatches >= 3,
+      s"transformWithState run must process >=3 micro-batches, got ${ran.dataBatches}")
+    import scala.jdk.CollectionConverters._
+    val stateMetrics = ran.progress.toSeq
+      .flatMap(p => Option(p.stateOperators).toSeq.flatMap(_.toSeq))
+      .flatMap(_.customMetrics.keySet.asScala)
+    require(stateMetrics.exists(_.toLowerCase.contains("rocksdb")),
+      s"no rocksdb state metrics — provider fell back: $stateMetrics")
+    require(!ran.out.isEmpty, s"transformWithState source matched no input under $inDir")
+    ran.out
   }
 
   /** Batch top-3-per-user twin: the processor's (value desc, event id asc)
@@ -1093,32 +1015,17 @@ object StreamingOps extends QueryModule {
           when(pmod(col("o_orderkey"), lit(2)) === 0, "f1").otherwise("f2")),
         "__b", in, Map("f1" -> t0, "f2" -> (t0 + 1000)))
     }
-    val root = java.nio.file.Files.createTempDirectory("graft-stream-enrich")
-    try {
-      val name = s"graft_stream_enrich_${sinkSeq.incrementAndGet()}"
-      withShufflePartitions(s, 4) {
-        val q = s.readStream.schema(orders.schema)
-          .option("maxFilesPerTrigger", 1).parquet(inDir.toString)
-          .join(broadcast(cust), col("o_custkey") === col("c_custkey"))
-          .groupBy(col("c_mktsegment"))
-          .agg(count(lit(1)).as("n_orders"),
-            roundTo(sum(col("o_totalprice")), 2).as("sum_price"))
-          .writeStream
-          .outputMode("complete")
-          .format("memory")
-          .queryName(name)
-          .option("checkpointLocation", root.resolve("ckpt").toString)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        try {
-          q.awaitTermination()
-          val shaped = s.table(name).orderBy("c_mktsegment")
-          val out = s.createDataFrame(shaped.collectAsList(), shaped.schema)
-          require(!out.isEmpty, "stream-static enrichment emitted no rows")
-          out
-        } finally scala.util.Try(s.catalog.dropTempView(name))
-      }
-    } finally deleteRecursively(root)
+    val out = runAvailableNow(s, "enrich", statePartitions,
+        Sink.Memory("complete", Some(_.orderBy("c_mktsegment")))) {
+      s.readStream.schema(orders.schema)
+        .option("maxFilesPerTrigger", 1).parquet(inDir.toString)
+        .join(broadcast(cust), col("o_custkey") === col("c_custkey"))
+        .groupBy(col("c_mktsegment"))
+        .agg(count(lit(1)).as("n_orders"),
+          roundTo(sum(col("o_totalprice")), 2).as("sum_price"))
+    }.out
+    require(!out.isEmpty, "stream-static enrichment emitted no rows")
+    out
   }
 
   /** Batch enrichment join + aggregate — the streamed result's final
@@ -1150,7 +1057,7 @@ object StreamingOps extends QueryModule {
     * one state-store lifecycle per shuffle partition, twice under
     * min-of-2 — a fixed cost with no plan content. Two time-splits (not
     * three) still exercise cross-batch session continuation, and the
-    * stateful exchange runs at 4 partitions ([[withShufflePartitions]]).
+    * stateful exchange runs at 4 partitions ([[statePartitions]]).
     * The gates are unchanged: same full-stream oracle, and the idle-gap
     * regression spec pins the across-batch timeout semantics separately.
     * (r10: 4 micro-batches × 4 stores after the partition trim; r11: 3
@@ -1195,33 +1102,25 @@ object StreamingOps extends QueryModule {
 
   def streamSessionize(s: SparkSession, dir: String): DataFrame = {
     val (inDir, ev) = sessStagedInput(s, dir)
-    val root = java.nio.file.Files.createTempDirectory("graft-stream-sess")
-    try {
-      val name = s"graft_stream_sess_${sinkSeq.incrementAndGet()}"
-      withStreamBatchConfs(s, 4) {
-        val stream = s.readStream.schema(ev.schema)
-          .option("maxFilesPerTrigger", 1).parquet(inDir.toString)
-          .withWatermark("ts", "1 hour")
-        val q = StreamingPipeline.sessionizeStream(stream, gapMinutes = 30)
-          .writeStream
-          .trigger(Trigger.AvailableNow())
-          .option("checkpointLocation", root.resolve("ckpt").toString)
-          .format("memory").queryName(name).outputMode("append")
-          .start()
-        try {
-          q.awaitTermination()
-          val shaped = s.table(name)
-            .filter(col("user_id") >= 0)
-            .select(col("user_id"), col("session_id"), col("n_events"),
-              col("session_start_us"), col("session_end_us"))
-            .orderBy("user_id", "session_id")
-          val out = s.createDataFrame(shaped.collectAsList(), shaped.schema)
-          require(!out.isEmpty, "streaming sessionizer emitted no sessions")
-          out
-        } finally scala.util.Try(s.catalog.dropTempView(name))
-      }
-    } finally deleteRecursively(root)
+    val out = runAvailableNow(s, "sess", noTrailingBatch,
+        Sink.Memory("append", Some(sessionRows))) {
+      val stream = s.readStream.schema(ev.schema)
+        .option("maxFilesPerTrigger", 1).parquet(inDir.toString)
+        .withWatermark("ts", "1 hour")
+      StreamingPipeline.sessionizeStream(stream, gapMinutes = 30).toDF()
+    }.out
+    require(!out.isEmpty, "streaming sessionizer emitted no sessions")
+    out
   }
+
+  /** The batch sessionizer's rows out of a session sink, sentinel users
+    * (negative ids) dropped.
+    */
+  private def sessionRows(sink: DataFrame): DataFrame =
+    sink.filter(col("user_id") >= 0)
+      .select(col("user_id"), col("session_id"), col("n_events"),
+        col("session_start_us"), col("session_end_us"))
+      .orderBy("user_id", "session_id")
 
   /** Gap sessionization on `transformWithState` EVENT-TIME TIMERS
     * ([[TwsSessionizer]]) — the TWS API leg the state matrix still
@@ -1242,38 +1141,20 @@ object StreamingOps extends QueryModule {
   def streamTwsSessionize(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val (inDir, ev) = sessStagedInput(s, dir)
-    val root = java.nio.file.Files.createTempDirectory("graft-stream-twssess")
-    try {
-      val name = s"graft_stream_twsss_${sinkSeq.incrementAndGet()}"
-      withConfs(s, rocksProviderConf) { withStreamBatchConfs(s, 4) {
-        val q = s.readStream.schema(ev.schema)
-          .option("maxFilesPerTrigger", 1).parquet(inDir.toString)
-          .withWatermark("ts", "1 hour")
-          .as[SessIn]
-          .groupByKey(_.user_id)
-          .transformWithState(new TwsSessionizer(30),
-            org.apache.spark.sql.streaming.TimeMode.EventTime(),
-            org.apache.spark.sql.streaming.OutputMode.Update())
-          .writeStream
-          .outputMode("update")
-          .format("memory")
-          .queryName(name)
-          .option("checkpointLocation", root.resolve("ckpt").toString)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        try {
-          q.awaitTermination()
-          val shaped = s.table(name)
-            .filter(col("user_id") >= 0)
-            .select(col("user_id"), col("session_id"), col("n_events"),
-              col("session_start_us"), col("session_end_us"))
-            .orderBy("user_id", "session_id")
-          val out = s.createDataFrame(shaped.collectAsList(), shaped.schema)
-          require(!out.isEmpty, "TWS timer sessionizer emitted no sessions")
-          out
-        } finally scala.util.Try(s.catalog.dropTempView(name))
-      } }
-    } finally deleteRecursively(root)
+    val out = runAvailableNow(s, "twsss", rocksState ++ noTrailingBatch,
+        Sink.Memory("update", Some(sessionRows))) {
+      s.readStream.schema(ev.schema)
+        .option("maxFilesPerTrigger", 1).parquet(inDir.toString)
+        .withWatermark("ts", "1 hour")
+        .as[SessIn]
+        .groupByKey(_.user_id)
+        .transformWithState(new TwsSessionizer(30),
+          org.apache.spark.sql.streaming.TimeMode.EventTime(),
+          org.apache.spark.sql.streaming.OutputMode.Update())
+        .toDF()
+    }.out
+    require(!out.isEmpty, "TWS timer sessionizer emitted no sessions")
+    out
   }
 
   /** STREAMING `observe()` — the per-micro-batch twin of the batch
@@ -1291,46 +1172,21 @@ object StreamingOps extends QueryModule {
     */
   def streamObservedCounts(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val ev = graft.engine.Tables.events(s, dir)
-      .filter(col("user_id").isNotNull)
-      .select(col("event_id"), col("user_id"), col("value"))
-      .withColumn("b", (col("event_id") % 3).cast("string"))
-    val inDir = StagedLayouts.dir("upd", dir) { in =>
-      val t0 = 1700000000000L
-      stageSplits(ev, "b", in,
-        Map("0" -> t0, "1" -> (t0 + 60000L), "2" -> (t0 + 120000L)))
-    }
-    val root = java.nio.file.Files.createTempDirectory("graft-stream-obs")
-    try {
-      val name = s"graft_stream_obs_${sinkSeq.incrementAndGet()}"
-      val srcSchema = ev.drop("b").schema
-      withShufflePartitions(s, 4) {
-        val q = s.readStream.schema(srcSchema)
-          .option("maxFilesPerTrigger", 1).parquet(inDir.toString)
-          .observe("graft_obs_stream",
-            count(lit(1)).as("obs_rows"),
-            sum(floor(col("value") * 100 + 0.5)).as("obs_cents"))
-          .groupBy(col("user_id"))
-          .agg(count(lit(1)).as("n"))
-          .writeStream
-          .outputMode("update")
-          .format("memory")
-          .queryName(name)
-          .option("checkpointLocation", root.resolve("ckpt").toString)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        try {
-          q.awaitTermination()
-          val perBatch = q.recentProgress.toSeq
-            .flatMap(p => Option(p.observedMetrics.get("graft_obs_stream")))
-          require(perBatch.nonEmpty, "no observed metrics surfaced")
-          val rows = perBatch.map(_.getAs[Long]("obs_rows")).sum
-          val cents = perBatch.map(_.getAs[Long]("obs_cents")).sum
-          Seq((perBatch.size.toLong, rows, cents / 100.0))
-            .toDF("n_obs_batches", "obs_rows", "obs_value_sum")
-        } finally scala.util.Try(s.catalog.dropTempView(name))
-      }
-    } finally deleteRecursively(root)
+    val (inDir, srcSchema) = thirdsInput(s, dir, "upd", "event_id", "user_id", "value")
+    val perBatch = runAvailableNow(s, "obs", statePartitions, Sink.Memory("update")) {
+      s.readStream.schema(srcSchema)
+        .option("maxFilesPerTrigger", 1).parquet(inDir.toString)
+        .observe("graft_obs_stream",
+          count(lit(1)).as("obs_rows"),
+          sum(floor(col("value") * 100 + 0.5)).as("obs_cents"))
+        .groupBy(col("user_id"))
+        .agg(count(lit(1)).as("n"))
+    }.progress.toSeq.flatMap(p => Option(p.observedMetrics.get("graft_obs_stream")))
+    require(perBatch.nonEmpty, "no observed metrics surfaced")
+    val rows = perBatch.map(_.getAs[Long]("obs_rows")).sum
+    val cents = perBatch.map(_.getAs[Long]("obs_cents")).sum
+    Seq((perBatch.size.toLong, rows, cents / 100.0))
+      .toDF("n_obs_batches", "obs_rows", "obs_value_sum")
   }
 
   val streamObservedCountsOracle: String =
@@ -1351,50 +1207,25 @@ object StreamingOps extends QueryModule {
     */
   def streamTwsTypeCounts(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val ev = graft.engine.Tables.events(s, dir)
-      .filter(col("user_id").isNotNull)
-      .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
-      .withColumn("b", (col("event_id") % 3).cast("string"))
-    val inDir = StagedLayouts.dir("updt", dir) { in =>
-      val t0 = 1700000000000L
-      stageSplits(ev, "b", in,
-        Map("0" -> t0, "1" -> (t0 + 60000L), "2" -> (t0 + 120000L)))
+    val (inDir, srcSchema) = thirdsInput(s, dir, "updt", "event_id", "user_id", "event_type", "value")
+    val ran = runAvailableNow(s, "twstc", rocksState,
+        Sink.Memory("update", Some(_.groupBy(col("user_id"), col("event_type"))
+          .agg(max(col("n_events")).as("n_events"),
+            (max_by(col("sum_cents"), col("n_events")) / 100.0).as("sum_value"))
+          .orderBy("user_id", "event_type")))) {
+      s.readStream.schema(srcSchema)
+        .option("maxFilesPerTrigger", 1).parquet(inDir.toString)
+        .as[TcIn]
+        .groupByKey(_.user_id)
+        .transformWithState(new TwsTypeCountsProcessor,
+          org.apache.spark.sql.streaming.TimeMode.None(),
+          org.apache.spark.sql.streaming.OutputMode.Update())
+        .toDF()
     }
-    val root = java.nio.file.Files.createTempDirectory("graft-stream-twstc")
-    try {
-      val name = s"graft_stream_twstc_${sinkSeq.incrementAndGet()}"
-      val srcSchema = ev.drop("b").schema
-      withConfs(s, rocksProviderConf) { withShufflePartitions(s, 4) {
-        val q = s.readStream.schema(srcSchema)
-          .option("maxFilesPerTrigger", 1).parquet(inDir.toString)
-          .as[TcIn]
-          .groupByKey(_.user_id)
-          .transformWithState(new TwsTypeCountsProcessor,
-            org.apache.spark.sql.streaming.TimeMode.None(),
-            org.apache.spark.sql.streaming.OutputMode.Update())
-          .writeStream
-          .outputMode("update")
-          .format("memory")
-          .queryName(name)
-          .option("checkpointLocation", root.resolve("ckpt").toString)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        try {
-          q.awaitTermination()
-          val dataBatches = q.recentProgress.count(_.numInputRows > 0)
-          require(dataBatches >= 3,
-            s"map state must accumulate across >=3 batches, got $dataBatches")
-          val shaped = s.table(name)
-            .groupBy(col("user_id"), col("event_type"))
-            .agg(max(col("n_events")).as("n_events"),
-              (max_by(col("sum_cents"), col("n_events")) / 100.0).as("sum_value"))
-            .orderBy("user_id", "event_type")
-          val out = s.createDataFrame(shaped.collectAsList(), shaped.schema)
-          require(!out.isEmpty, "map-state counts emitted nothing")
-          out
-        } finally scala.util.Try(s.catalog.dropTempView(name))
-      } }
-    } finally deleteRecursively(root)
+    require(ran.dataBatches >= 3,
+      s"map state must accumulate across >=3 batches, got ${ran.dataBatches}")
+    require(!ran.out.isEmpty, "map-state counts emitted nothing")
+    ran.out
   }
 
   val streamTwsTypeCountsOracle: String =
@@ -1470,45 +1301,31 @@ object StreamingOps extends QueryModule {
       java.nio.file.Files.writeString(in.resolve("cut_us.txt"), cutUs.toString)
     }
     val cutUs = java.nio.file.Files.readString(inDir.resolve("cut_us.txt")).trim.toLong
-    val root = java.nio.file.Files.createTempDirectory("graft-stream-ssw")
-    try {
-      val ioSchema = ev.schema
-      val name = s"graft_stream_ssw_${sinkSeq.incrementAndGet()}"
-      withStreamBatchConfs(s, 4) {
-        val q = s.readStream.schema(ioSchema)
-          .option("maxFilesPerTrigger", 1)
-          .parquet(inDir.resolve("events").toString)
-          .withWatermark("ts", "1 hour")
-          .groupBy(col("user_id"), session_window(col("ts"), "30 minutes"))
-          .agg(count(lit(1)).as("n_events"), roundTo(sum(col("value")), 2).as("sum_value"))
-          .select(col("user_id"),
-            unix_micros(col("session_window.start")).as("s_start_us"),
-            unix_micros(col("session_window.end")).as("s_end_us"),
-            col("n_events"), col("sum_value"))
-          .writeStream
-          .outputMode("append")
-          .format("memory")
-          .queryName(name)
-          .option("checkpointLocation", root.resolve("ckpt").toString)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        try {
-          q.awaitTermination()
-          val shaped = s.table(name)
-            .filter(col("user_id") >= 0)
-            .orderBy("user_id", "s_start_us")
-          val out = s.createDataFrame(shaped.collectAsList(), shaped.schema)
-          require(!out.isEmpty, "session stream emitted no sessions")
-          // the engineered straddler really merged: a session starting at
-          // or before the cut whose LAST EVENT (end − gap) is past it
-          require(out.where(col("s_start_us") <= cutUs &&
-              col("s_end_us") - 1800000000L > cutUs).count() > 0,
-            "no session merged across the micro-batch cut — state merge unexercised")
-          out
-        } finally scala.util.Try(s.catalog.dropTempView(name))
-      }
-    } finally deleteRecursively(root)
+    val out = runAvailableNow(s, "ssw", noTrailingBatch,
+        Sink.Memory("append", Some(sessionWindowRows))) {
+      s.readStream.schema(ev.schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(inDir.resolve("events").toString)
+        .withWatermark("ts", "1 hour")
+        .groupBy(col("user_id"), session_window(col("ts"), "30 minutes"))
+        .agg(count(lit(1)).as("n_events"), roundTo(sum(col("value")), 2).as("sum_value"))
+        .select(col("user_id"),
+          unix_micros(col("session_window.start")).as("s_start_us"),
+          unix_micros(col("session_window.end")).as("s_end_us"),
+          col("n_events"), col("sum_value"))
+    }.out
+    require(!out.isEmpty, "session stream emitted no sessions")
+    // the engineered straddler really merged: a session starting at or
+    // before the cut whose LAST EVENT (end − gap) is past it
+    require(out.where(col("s_start_us") <= cutUs &&
+        col("s_end_us") - 1800000000L > cutUs).count() > 0,
+      "no session merged across the micro-batch cut — state merge unexercised")
+    out
   }
+
+  /** A `session_window` sink's rows, sentinel users dropped. */
+  private def sessionWindowRows(sink: DataFrame): DataFrame =
+    sink.filter(col("user_id") >= 0).orderBy("user_id", "s_start_us")
 
   /** [[streamSessionWindow]]'s DYNAMIC-GAP twin
     * ([[graft.operators.WindowsAndStats.w11SessionDynGap]] under append
@@ -1563,45 +1380,27 @@ object StreamingOps extends QueryModule {
     val Array(pu, aUs, bUs) =
       java.nio.file.Files.readString(inDir.resolve("pair.txt")).trim
         .split(" ").map(_.toLong)
-    val root = java.nio.file.Files.createTempDirectory("graft-stream-sswd")
-    try {
-      val ioSchema = ev.schema
-      val name = s"graft_stream_sswd_${sinkSeq.incrementAndGet()}"
-      withStreamBatchConfs(s, 4) {
-        val q = s.readStream.schema(ioSchema)
-          .option("maxFilesPerTrigger", 1)
-          .parquet(inDir.resolve("events").toString)
-          .withWatermark("ts", "1 hour")
-          .groupBy(col("user_id"), session_window(col("ts"),
-            when(col("event_type") === "error", "10 minutes")
-              .otherwise("45 minutes")))
-          .agg(count(lit(1)).as("n_events"),
-            roundTo(sum(col("value")), 2).as("sum_value"))
-          .select(col("user_id"),
-            unix_micros(col("session_window.start")).as("s_start_us"),
-            unix_micros(col("session_window.end")).as("s_end_us"),
-            col("n_events"), col("sum_value"))
-          .writeStream
-          .outputMode("append")
-          .format("memory")
-          .queryName(name)
-          .option("checkpointLocation", root.resolve("ckpt").toString)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        try {
-          q.awaitTermination()
-          val shaped = s.table(name)
-            .filter(col("user_id") >= 0)
-            .orderBy("user_id", "s_start_us")
-          val out = s.createDataFrame(shaped.collectAsList(), shaped.schema)
-          require(!out.isEmpty, "dynamic session stream emitted no sessions")
-          require(out.where(col("user_id") === pu &&
-              col("s_start_us") <= aUs && col("s_end_us") > bUs).count() > 0,
-            "the engineered straddle session did not merge across the cut")
-          out
-        } finally scala.util.Try(s.catalog.dropTempView(name))
-      }
-    } finally deleteRecursively(root)
+    val out = runAvailableNow(s, "sswd", noTrailingBatch,
+        Sink.Memory("append", Some(sessionWindowRows))) {
+      s.readStream.schema(ev.schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(inDir.resolve("events").toString)
+        .withWatermark("ts", "1 hour")
+        .groupBy(col("user_id"), session_window(col("ts"),
+          when(col("event_type") === "error", "10 minutes")
+            .otherwise("45 minutes")))
+        .agg(count(lit(1)).as("n_events"),
+          roundTo(sum(col("value")), 2).as("sum_value"))
+        .select(col("user_id"),
+          unix_micros(col("session_window.start")).as("s_start_us"),
+          unix_micros(col("session_window.end")).as("s_end_us"),
+          col("n_events"), col("sum_value"))
+    }.out
+    require(!out.isEmpty, "dynamic session stream emitted no sessions")
+    require(out.where(col("user_id") === pu &&
+        col("s_start_us") <= aUs && col("s_end_us") > bUs).count() > 0,
+      "the engineered straddle session did not merge across the cut")
+    out
   }
 
   /** `writeStream.toTable` into the DSv2 catalog
@@ -1623,33 +1422,16 @@ object StreamingOps extends QueryModule {
   def streamToCatalogTable(s: SparkSession, dir: String): DataFrame = {
     s.conf.set("spark.sql.catalog.graft_cat",
       classOf[graft.sources.GraftCatalog].getName)
-    val ev = graft.engine.Tables.events(s, dir)
-      .filter(col("user_id").isNotNull)
-      .select(col("event_id"), col("user_id"), col("value"))
-      .withColumn("b", (col("event_id") % 3).cast("string"))
-    val inDir = StagedLayouts.dir("tocat", dir) { in =>
-      val t0 = 1700000000000L
-      stageSplits(ev, "b", in,
-        Map("0" -> t0, "1" -> (t0 + 60000L), "2" -> (t0 + 120000L)))
-    }
+    val (inDir, srcSchema) = thirdsInput(s, dir, "tocat", "event_id", "user_id", "value")
     val tbl = s"graft_cat.stream.t${sinkSeq.incrementAndGet()}"
-    val root = java.nio.file.Files.createTempDirectory("graft-stream-tocat")
     try {
-      val srcSchema = ev.drop("b").schema
-      // pre-create so version ordinals are stable: v0 = empty create,
-      // v1..v3 = the three epochs
+      // pre-create so version ordinals are stable: the empty CTAS is
+      // v0 and v1, v2..v4 = the three epochs
       s.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](),
         srcSchema).writeTo(tbl).create()
-      withShufflePartitions(s, 4) {
-        val q = s.readStream.schema(srcSchema)
+      runAvailableNow(s, "tocat", statePartitions, Sink.Table(tbl)) {
+        s.readStream.schema(srcSchema)
           .option("maxFilesPerTrigger", 1).parquet(inDir.toString)
-          .writeStream
-          .outputMode("append")
-          .option("checkpointLocation", root.resolve("ckpt").toString)
-          .trigger(Trigger.AvailableNow())
-          .toTable(tbl)
-        try q.awaitTermination()
-        finally scala.util.Try(q.stop())
       }
       def vDigest(v: Int): DataFrame = s.sql(
         s"""SELECT CAST($v AS BIGINT) AS v, count(*) AS n,
@@ -1659,10 +1441,7 @@ object StreamingOps extends QueryModule {
       val out = vDigest(2).unionByName(vDigest(3)).unionByName(vDigest(4))
         .orderBy("v")
       s.createDataFrame(out.collectAsList(), out.schema)
-    } finally {
-      scala.util.Try(s.sql(s"DROP TABLE $tbl"))
-      deleteRecursively(root)
-    }
+    } finally scala.util.Try(s.sql(s"DROP TABLE $tbl"))
   }
 
   /** STREAMING INGEST INTO A PARTITIONED CATALOG TABLE — the write
@@ -1683,35 +1462,18 @@ object StreamingOps extends QueryModule {
   def streamIntoPartitioned(s: SparkSession, dir: String): DataFrame = {
     s.conf.set("spark.sql.catalog.graft_cat",
       classOf[graft.sources.GraftCatalog].getName)
-    val ev = graft.engine.Tables.events(s, dir)
-      .filter(col("user_id").isNotNull)
-      .select(col("event_id"), col("event_type"), col("value"))
-      .withColumn("b", (col("event_id") % 3).cast("string"))
-    val inDir = StagedLayouts.dir("intopart", dir) { in =>
-      val t0 = 1700000000000L
-      stageSplits(ev, "b", in,
-        Map("0" -> t0, "1" -> (t0 + 60000L), "2" -> (t0 + 120000L)))
-    }
+    val (inDir, srcSchema) = thirdsInput(s, dir, "intopart", "event_id", "event_type", "value")
     val tbl = s"graft_cat.stream.pt${sinkSeq.incrementAndGet()}"
-    val root = java.nio.file.Files.createTempDirectory("graft-stream-intopart")
     try {
-      val srcSchema = ev.drop("b").schema
       // pre-create the PARTITIONED target so epoch ordinals are stable
       s.createDataFrame(
         java.util.Collections.emptyList[org.apache.spark.sql.Row](),
         srcSchema).writeTo(tbl).partitionedBy(col("event_type")).create()
       val base = graft.sources.GraftCatalog
         .partVersions(s"cat::$tbl").size - 1
-      withShufflePartitions(s, 4) {
-        val q = s.readStream.schema(srcSchema)
+      runAvailableNow(s, "intopart", statePartitions, Sink.Table(tbl)) {
+        s.readStream.schema(srcSchema)
           .option("maxFilesPerTrigger", 1).parquet(inDir.toString)
-          .writeStream
-          .outputMode("append")
-          .option("checkpointLocation", root.resolve("ckpt").toString)
-          .trigger(Trigger.AvailableNow())
-          .toTable(tbl)
-        try q.awaitTermination()
-        finally scala.util.Try(q.stop())
       }
       def vDigest(i: Int): DataFrame = s.sql(
         s"""SELECT CAST($i AS BIGINT) AS v, count(*) AS n,
@@ -1721,10 +1483,7 @@ object StreamingOps extends QueryModule {
       val out = vDigest(1).unionByName(vDigest(2)).unionByName(vDigest(3))
         .orderBy("v")
       s.createDataFrame(out.collectAsList(), out.schema)
-    } finally {
-      scala.util.Try(s.sql(s"DROP TABLE $tbl"))
-      deleteRecursively(root)
-    }
+    } finally scala.util.Try(s.sql(s"DROP TABLE $tbl"))
   }
 
   val streamIntoPartitionedOracle: String =
@@ -1759,33 +1518,42 @@ object StreamingOps extends QueryModule {
     * source, a time-travel archive, and a streaming source, all off one
     * ledger.
     */
-  def streamFromCatalogTable(s: SparkSession, dir: String): DataFrame = {
+  def streamFromCatalogTable(s: SparkSession, dir: String): DataFrame =
+    streamFromTableCore(s, dir, "fromcat", partitionCol = None)
+
+  /** `df.writeTo(tbl)`, partitioned by `partitionCol` when one is given. */
+  private def tableWriter(df: DataFrame, tbl: String, partitionCol: Option[String]) = {
+    val w = df.writeTo(tbl)
+    partitionCol.fold[org.apache.spark.sql.CreateTableWriter[org.apache.spark.sql.Row]](w)(
+      c => w.partitionedBy(col(c)))
+  }
+
+  /** The streaming-read gate's script over a flat source table, or over
+    * one partitioned by (and carrying) `partitionCol`: two AvailableNow
+    * drains resume ONE checkpoint around a third commit.
+    */
+  private def streamFromTableCore(s: SparkSession, dir: String, tag: String,
+      partitionCol: Option[String]): DataFrame = {
     s.conf.set("spark.sql.catalog.graft_cat",
       classOf[graft.sources.GraftCatalog].getName)
     val ev = graft.engine.Tables.events(s, dir)
       .filter(col("user_id").isNotNull)
-      .select(col("event_id"), col("user_id"), col("value"))
-    val tbl = s"graft_cat.stream.r${sinkSeq.incrementAndGet()}"
-    val root = java.nio.file.Files.createTempDirectory("graft-stream-fromcat")
-    try {
+      .select((Seq("event_id") ++ partitionCol ++ Seq("user_id", "value")).map(col): _*)
+    val tbl = s"graft_cat.stream.$tag${sinkSeq.incrementAndGet()}"
+    try withTempDir(s"stream-$tag-ckpt") { ckpt =>
       def third(i: Int) = ev.filter(col("event_id") % 3 === i).repartition(1)
-      third(0).writeTo(tbl).create()
+      tableWriter(third(0), tbl, partitionCol).create()
       third(1).writeTo(tbl).append()
       val nAcc = new java.util.concurrent.atomic.AtomicLong()
       val cAcc = new java.util.concurrent.atomic.AtomicLong()
       def drain(): Unit = {
-        val q = s.readStream.table(tbl)
-          .writeStream.outputMode("append")
-          .foreachBatch { (df: DataFrame, _: Long) =>
-            val r = df.agg(count(lit(1)),
-              sum(floor(col("value") * 100 + 0.5).cast("long"))).head
-            nAcc.addAndGet(r.getLong(0))
-            if (!r.isNullAt(1)) { cAcc.addAndGet(r.getLong(1)); () }
-            ()
-          }
-          .option("checkpointLocation", root.resolve("ckpt").toString)
-          .trigger(Trigger.AvailableNow()).start()
-        try q.awaitTermination() finally { scala.util.Try(q.stop()); () }
+        runAvailableNow(s, tag, Map.empty, Sink.Batches { (df, _) =>
+          val r = df.agg(count(lit(1)),
+            sum(floor(col("value") * 100 + 0.5).cast("long"))).head
+          nAcc.addAndGet(r.getLong(0))
+          if (!r.isNullAt(1)) { cAcc.addAndGet(r.getLong(1)); () }
+        }, Some(ckpt.toString))(s.readStream.table(tbl))
+        ()
       }
       drain()
       val (n1, c1) = (nAcc.get, cAcc.get)
@@ -1796,10 +1564,7 @@ object StreamingOps extends QueryModule {
       s.createDataFrame(java.util.Collections.singletonList(
         org.apache.spark.sql.Row(n1, c1 / 100.0,
           nAcc.get - n1, (cAcc.get - c1) / 100.0)), schema)
-    } finally {
-      scala.util.Try(s.sql(s"DROP TABLE $tbl"))
-      deleteRecursively(root)
-    }
+    } finally scala.util.Try(s.sql(s"DROP TABLE $tbl"))
   }
 
   /** STREAMING UPSERT VIA EQUALITY DELETES — the workload the second
@@ -1823,58 +1588,8 @@ object StreamingOps extends QueryModule {
     * is untouched, and the read view is last-write-wins per key. The
     * DV debt compacts away like positional deletes.
     */
-  def streamUpsertEq(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.catalog.graft_cat",
-      classOf[graft.sources.GraftCatalog].getName)
-    val ev = graft.engine.Tables.events(s, dir)
-      .filter(col("user_id").isNotNull && col("event_id") % 3 === 0)
-      .select(col("event_id"), col("value"))
-    val n = sinkSeq.incrementAndGet()
-    val src = s"graft_cat.stream.ueqs$n"
-    val tgt = s"graft_cat.stream.ueqt$n"
-    val root = java.nio.file.Files.createTempDirectory("graft-stream-ueq")
-    try {
-      ev.repartition(1).writeTo(src).create()
-      ev.limit(0).writeTo(tgt)
-        .tableProperty("write.delete.mode", "equality").create()
-      def drain(): Unit = {
-        val q = s.readStream.table(src)
-          .writeStream.outputMode("append")
-          .foreachBatch { (df: DataFrame, _: Long) =>
-            val batch = df.cache()
-            // the batch's keys flow to the eq-delete channel AS A PLAN
-            // — never gathered to the driver, never rendered as an
-            // IN-list SQL string; tasks dedup and ship tuples via the
-            // write-commit protocol
-            batch.select("event_id")
-              .writeTo(s"graft_cat.stream.`ueqt$n@eq_deletes`").append()
-            batch.writeTo(tgt).append()
-            batch.unpersist()
-            ()
-          }
-          .option("checkpointLocation", root.resolve("ckpt").toString)
-          .trigger(Trigger.AvailableNow()).start()
-        try q.awaitTermination() finally { scala.util.Try(q.stop()); () }
-      }
-      drain() // batch 1: the seed keys
-      // batch 2: every 5th key arrives again with an updated value
-      ev.filter(col("event_id") % 5 === 0)
-        .select(col("event_id"), (col("value") + 1000).as("value"))
-        .repartition(1).writeTo(src).append()
-      drain() // the upsert: eq-delete the keys, append the new rows
-      val out = s.table(tgt).agg(
-        count(lit(1)).as("n_rows"),
-        (sum(floor(col("value") * 100 + 0.5).cast("long")) / 100.0)
-          .as("sum_value"),
-        count(when(col("event_id") % 5 === 0 && col("value") >= 1000, 1))
-          .as("n_updated"))
-      s.createDataFrame(out.collectAsList(), out.schema)
-    } finally {
-      scala.util.Try(s.sql(s"DROP TABLE $src"))
-      scala.util.Try(s.sql(s"DROP TABLE $tgt"))
-      deleteRecursively(root)
-    }
-  }
+  def streamUpsertEq(s: SparkSession, dir: String): DataFrame =
+    streamUpsertEqCore(s, dir, "ueq", partitionCol = None)
 
   /** The PARTITIONED twin of [[streamUpsertEq]] — the full 100 TB
     * upsert story in one query: the target is PARTITIONED (identity on
@@ -1888,53 +1603,61 @@ object StreamingOps extends QueryModule {
     * delete fan-out: the two r18 write-path pieces composing on the
     * workload they exist for.
     */
-  def streamUpsertEqPartitioned(s: SparkSession, dir: String): DataFrame = {
+  def streamUpsertEqPartitioned(s: SparkSession, dir: String): DataFrame =
+    streamUpsertEqCore(s, dir, "ueqp", partitionCol = Some("event_type"))
+
+  /** The streaming upsert over a flat target, or over one partitioned by
+    * `partitionCol` — which then joins the upsert key and the digest
+    * (`n_types`). Two drains resume ONE checkpoint: the seed keys, then
+    * every 5th key again with an updated value.
+    */
+  private def streamUpsertEqCore(s: SparkSession, dir: String, tag: String,
+      partitionCol: Option[String]): DataFrame = {
     s.conf.set("spark.sql.catalog.graft_cat",
       classOf[graft.sources.GraftCatalog].getName)
+    val key = Seq("event_id") ++ partitionCol
     val ev = graft.engine.Tables.events(s, dir)
       .filter(col("user_id").isNotNull && col("event_id") % 3 === 0)
-      .select(col("event_id"), col("event_type"), col("value"))
+      .select((key :+ "value").map(col): _*)
     val n = sinkSeq.incrementAndGet()
-    val src = s"graft_cat.stream.ueqps$n"
-    val tgt = s"graft_cat.stream.ueqpt$n"
-    val root = java.nio.file.Files.createTempDirectory("graft-stream-ueqp")
-    try {
+    val src = s"graft_cat.stream.${tag}s$n"
+    val tgt = s"graft_cat.stream.${tag}t$n"
+    try withTempDir(s"stream-$tag-ckpt") { ckpt =>
       ev.repartition(1).writeTo(src).create()
-      ev.limit(0).writeTo(tgt).partitionedBy(col("event_type"))
+      tableWriter(ev.limit(0), tgt, partitionCol)
         .tableProperty("write.delete.mode", "equality").create()
       def drain(): Unit = {
-        val q = s.readStream.table(src)
-          .writeStream.outputMode("append")
-          .foreachBatch { (df: DataFrame, _: Long) =>
-            val batch = df.cache()
-            batch.select("event_id", "event_type")
-              .writeTo(s"graft_cat.stream.`ueqpt$n@eq_deletes`").append()
-            batch.writeTo(tgt).append()
-            batch.unpersist()
-            ()
-          }
-          .option("checkpointLocation", root.resolve("ckpt").toString)
-          .trigger(Trigger.AvailableNow()).start()
-        try q.awaitTermination() finally { scala.util.Try(q.stop()); () }
+        runAvailableNow(s, tag, Map.empty, Sink.Batches { (df, _) =>
+          val batch = df.cache()
+          // the batch's keys flow to the eq-delete channel AS A PLAN —
+          // never collected, never rendered as an IN-list SQL string;
+          // tasks dedup and ship tuples via the write-commit protocol
+          batch.select(key.map(col): _*)
+            .writeTo(s"graft_cat.stream.`${tag}t$n@eq_deletes`").append()
+          batch.writeTo(tgt).append()
+          batch.unpersist()
+          ()
+        }, Some(ckpt.toString))(s.readStream.table(src))
+        ()
       }
-      drain()
+      drain() // batch 1: the seed keys
+      // batch 2: every 5th key arrives again with an updated value
       ev.filter(col("event_id") % 5 === 0)
-        .select(col("event_id"), col("event_type"),
-          (col("value") + 1000).as("value"))
+        .withColumn("value", col("value") + 1000)
         .repartition(1).writeTo(src).append()
-      drain()
-      val out = s.table(tgt).agg(
+      drain() // the upsert: eq-delete the keys, append the new rows
+      val digest = Seq(
         count(lit(1)).as("n_rows"),
         (sum(floor(col("value") * 100 + 0.5).cast("long")) / 100.0)
           .as("sum_value"),
         count(when(col("event_id") % 5 === 0 && col("value") >= 1000, 1))
-          .as("n_updated"),
-        countDistinct(col("event_type")).as("n_types"))
+          .as("n_updated")) ++
+        partitionCol.map(c => countDistinct(col(c)).as("n_types"))
+      val out = s.table(tgt).agg(digest.head, digest.tail: _*)
       s.createDataFrame(out.collectAsList(), out.schema)
     } finally {
       scala.util.Try(s.sql(s"DROP TABLE $src"))
       scala.util.Try(s.sql(s"DROP TABLE $tgt"))
-      deleteRecursively(root)
     }
   }
 
@@ -1988,8 +1711,7 @@ object StreamingOps extends QueryModule {
       .select(col("event_id"), col("value"))
     val n = sinkSeq.incrementAndGet()
     val tbl = s"graft_cat.stream.ul$n"
-    val root = java.nio.file.Files.createTempDirectory("graft-stream-lineage")
-    try {
+    try withTempDir("stream-lineage-ckpt") { ckpt =>
       ev.repartition(1).writeTo(tbl)
         .tableProperty("write.mode", "merge-on-read").create()
       val ins = new java.util.concurrent.atomic.AtomicLong()
@@ -1997,30 +1719,26 @@ object StreamingOps extends QueryModule {
       val plus1000 = new java.util.concurrent.atomic.AtomicLong()
       val delIns = new java.util.concurrent.atomic.AtomicLong()
       def drain(): Unit = {
-        val q = s.readStream.table(s"graft_cat.stream.`ul$n@changes`")
-          .writeStream.outputMode("append")
-          .foreachBatch { (df: DataFrame, _: Long) =>
-            def cents(c: org.apache.spark.sql.Column) =
-              floor(c * 100 + 0.5).cast("long")
-            ins.addAndGet(
-              df.filter(col("_change_type") === "insert").count())
-            delIns.addAndGet(df.filter(col("_change_type") === "delete")
-              .count())
-            val pre = df.filter(col("_change_type") === "update_preimage")
-              .select(col("event_id"), col("value").as("pre_value"))
-            val post = df.filter(col("_change_type") === "update_postimage")
-              .select(col("event_id"), col("value").as("post_value"))
-            val joined = pre.join(post, "event_id")
-              .agg(count(lit(1)),
-                count(when(cents(col("post_value")) -
-                  cents(col("pre_value")) === 100000L, 1))).head
-            pairs.addAndGet(joined.getLong(0))
-            plus1000.addAndGet(joined.getLong(1))
-            ()
-          }
-          .option("checkpointLocation", root.resolve("ckpt").toString)
-          .trigger(Trigger.AvailableNow()).start()
-        try q.awaitTermination() finally { scala.util.Try(q.stop()); () }
+        runAvailableNow(s, "lineage", Map.empty, Sink.Batches { (df, _) =>
+          def cents(c: org.apache.spark.sql.Column) =
+            floor(c * 100 + 0.5).cast("long")
+          ins.addAndGet(
+            df.filter(col("_change_type") === "insert").count())
+          delIns.addAndGet(df.filter(col("_change_type") === "delete")
+            .count())
+          val pre = df.filter(col("_change_type") === "update_preimage")
+            .select(col("event_id"), col("value").as("pre_value"))
+          val post = df.filter(col("_change_type") === "update_postimage")
+            .select(col("event_id"), col("value").as("post_value"))
+          val joined = pre.join(post, "event_id")
+            .agg(count(lit(1)),
+              count(when(cents(col("post_value")) -
+                cents(col("pre_value")) === 100000L, 1))).head
+          pairs.addAndGet(joined.getLong(0))
+          plus1000.addAndGet(joined.getLong(1))
+          ()
+        }, Some(ckpt.toString))(s.readStream.table(s"graft_cat.stream.`ul$n@changes`"))
+        ()
       }
       drain() // consumes the seed inserts
       val run1Inserts = ins.get
@@ -2033,10 +1751,7 @@ object StreamingOps extends QueryModule {
       s.createDataFrame(java.util.Collections.singletonList(
         org.apache.spark.sql.Row(run1Inserts, pairs.get, plus1000.get,
           delIns.get)), schema)
-    } finally {
-      scala.util.Try(s.sql(s"DROP TABLE $tbl"))
-      deleteRecursively(root)
-    }
+    } finally scala.util.Try(s.sql(s"DROP TABLE $tbl"))
   }
 
   val streamUpdateLineageOracle: String =
@@ -2056,49 +1771,8 @@ object StreamingOps extends QueryModule {
     * the consumer reads the snapshot log, not the partitions, and a
     * checkpoint resume drains exactly the landed commits.
     */
-  def streamPartitionedSource(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.catalog.graft_cat",
-      classOf[graft.sources.GraftCatalog].getName)
-    val ev = graft.engine.Tables.events(s, dir)
-      .filter(col("user_id").isNotNull)
-      .select(col("event_id"), col("event_type"), col("user_id"),
-        col("value"))
-    val tbl = s"graft_cat.stream.p${sinkSeq.incrementAndGet()}"
-    val root = java.nio.file.Files.createTempDirectory("graft-stream-parts")
-    try {
-      def third(i: Int) = ev.filter(col("event_id") % 3 === i).repartition(1)
-      third(0).writeTo(tbl).partitionedBy(col("event_type")).create()
-      third(1).writeTo(tbl).append()
-      val nAcc = new java.util.concurrent.atomic.AtomicLong()
-      val cAcc = new java.util.concurrent.atomic.AtomicLong()
-      def drain(): Unit = {
-        val q = s.readStream.table(tbl)
-          .writeStream.outputMode("append")
-          .foreachBatch { (df: DataFrame, _: Long) =>
-            val r = df.agg(count(lit(1)),
-              sum(floor(col("value") * 100 + 0.5).cast("long"))).head
-            nAcc.addAndGet(r.getLong(0))
-            if (!r.isNullAt(1)) { cAcc.addAndGet(r.getLong(1)); () }
-            ()
-          }
-          .option("checkpointLocation", root.resolve("ckpt").toString)
-          .trigger(Trigger.AvailableNow()).start()
-        try q.awaitTermination() finally { scala.util.Try(q.stop()); () }
-      }
-      drain()
-      val (n1, c1) = (nAcc.get, cAcc.get)
-      third(2).writeTo(tbl).append()
-      drain() // same checkpoint: must consume exactly the new commit
-      val schema = org.apache.spark.sql.types.StructType.fromDDL(
-        "n_run1 BIGINT, total_run1 DOUBLE, n_run2_delta BIGINT, total_run2_delta DOUBLE")
-      s.createDataFrame(java.util.Collections.singletonList(
-        org.apache.spark.sql.Row(n1, c1 / 100.0,
-          nAcc.get - n1, (cAcc.get - c1) / 100.0)), schema)
-    } finally {
-      scala.util.Try(s.sql(s"DROP TABLE $tbl"))
-      deleteRecursively(root)
-    }
-  }
+  def streamPartitionedSource(s: SparkSession, dir: String): DataFrame =
+    streamFromTableCore(s, dir, "parts", partitionCol = Some("event_type"))
 
   val streamFromCatalogOracle: String =
     """SELECT
@@ -2257,26 +1931,16 @@ object StreamingOps extends QueryModule {
       stageSplits(ev.withColumn("__b",
           when(col("event_id") % 2 === 0, "b0").otherwise("b1")),
         "__b", in, Map("b0" -> t0, "b1" -> (t0 + 1000)))
-      withShufflePartitions(s, 4) {
-        val name = s"graft_stream_sr_${sinkSeq.incrementAndGet()}"
-        val q = s.readStream.schema(ev.schema)
+      // the checkpoint outlives the run: it IS the staged state
+      val ran = runAvailableNow(s, "sr", statePartitions, Sink.Memory("complete"),
+          checkpoint = Some(s"$r/ckpt")) {
+        s.readStream.schema(ev.schema)
           .option("maxFilesPerTrigger", 1).parquet(in.toString)
           .groupBy(col("user_id"))
           .agg(count(lit(1)).as("n_events"), sum(col("value")).as("sum_value"))
-          .writeStream
-          .outputMode("complete")
-          .format("memory")
-          .queryName(name)
-          .option("checkpointLocation", s"$r/ckpt")
-          .trigger(Trigger.AvailableNow())
-          .start()
-        try {
-          q.awaitTermination()
-          val dataBatches = q.recentProgress.count(_.numInputRows > 0)
-          require(dataBatches >= 2,
-            s"state must accumulate across >=2 batches, got $dataBatches")
-        } finally scala.util.Try(s.catalog.dropTempView(name))
       }
+      require(ran.dataBatches >= 2,
+        s"state must accumulate across >=2 batches, got ${ran.dataBatches}")
     }
   }
 
@@ -2391,21 +2055,12 @@ object StreamingOps extends QueryModule {
     */
   private[graft] def twsStateRoot(s: SparkSession, dir: String): String = {
     import s.implicits._
-    val ev = graft.engine.Tables.events(s, dir)
-      .filter(col("user_id").isNotNull)
-      .select(col("event_id"), col("user_id"), col("value"))
-      .withColumn("b", (col("event_id") % 3).cast("string"))
-    val inDir = StagedLayouts.dir("upd", dir) { in =>
-      val t0 = 1700000000000L
-      stageSplits(ev, "b", in,
-        Map("0" -> t0, "1" -> (t0 + 60000L), "2" -> (t0 + 120000L)))
-    }
+    val (inDir, srcSchema) = thirdsInput(s, dir, "upd", "event_id", "user_id", "value")
     val fp = graft.operators.SimilarityIndex.fingerprint(dir, "events.parquet")
     graft.engine.StagedRoots.of("twsstate", dir, fp) { r =>
-      val srcSchema = ev.drop("b").schema
-      withConfs(s, rocksProviderConf) { withShufflePartitions(s, 4) {
-        val name = s"graft_stream_twssr_${sinkSeq.incrementAndGet()}"
-        val q = s.readStream.schema(srcSchema)
+      val ran = runAvailableNow(s, "twssr", rocksState, Sink.Memory("update"),
+          checkpoint = Some(s"$r/ckpt")) {
+        s.readStream.schema(srcSchema)
           .option("maxFilesPerTrigger", 1)
           .parquet(inDir.toString)
           .as[TwsIn]
@@ -2413,20 +2068,10 @@ object StreamingOps extends QueryModule {
           .transformWithState(new TwsTopKProcessor(3),
             org.apache.spark.sql.streaming.TimeMode.None(),
             org.apache.spark.sql.streaming.OutputMode.Update())
-          .writeStream
-          .outputMode("update")
-          .format("memory")
-          .queryName(name)
-          .option("checkpointLocation", s"$r/ckpt")
-          .trigger(Trigger.AvailableNow())
-          .start()
-        try {
-          q.awaitTermination()
-          val dataBatches = q.recentProgress.count(_.numInputRows > 0)
-          require(dataBatches >= 3,
-            s"tws state staging must process >=3 micro-batches, got $dataBatches")
-        } finally scala.util.Try(s.catalog.dropTempView(name))
-      } }
+          .toDF()
+      }
+      require(ran.dataBatches >= 3,
+        s"tws state staging must process >=3 micro-batches, got ${ran.dataBatches}")
     }
   }
 }

@@ -1,95 +1,49 @@
 package graft.tools
 
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.streaming.StreamingQueryListener
+import org.apache.spark.sql.streaming.StreamingQueryListener._
 
 import graft.engine.Sessions
 
-/** Dev probe: floor cost of an AvailableNow stream-stream outer join at
-  * the stream_left_outer_join topology (the SHIPPED 3-batch layout: the
-  * purchase watermark sentinel rides in p2's file; B1 = c0+p1, B2 =
-  * c1+(p2∪p3), B3 = p4), with per-batch progress timings — run to locate
-  * where its wall-clock goes (query start? batch N? state commit?).
-  * Knobs: SP_PARTS (shuffle partitions), SP_WSCG (whole-stage codegen),
-  * SP_CKPT_ROOT (checkpoint filesystem). Measured r11: per-batch fixed
-  * cost ~0.6-0.9 s regardless of all three knobs — the incremental
-  * micro-batch machinery, not state partitions, codegen, or fsync.
+/** Dev probe: where a registered streaming query's wall-clock goes (query
+  * start? batch N? state commit?). Runs the SHIPPED query three times on
+  * one session and prints, from a StreamingQueryListener, every
+  * micro-batch's `durationMs` phases, state rows and input rows.
+  * Usage: `sbt "runMain graft.tools.StreamProbe [query]"` (default
+  * `stream_left_outer_join`), with SPARK_GRAFT_SF_DIR / SPARK_GRAFT_CPUS
+  * honored like [[TimeOne]]. The query's own conf scope sets its state
+  * partitions; whole-stage codegen is a `-Dspark.sql.codegen.wholeStage=…`
+  * JVM option and the checkpoint filesystem is `GRAFT_TMPDIR`.
+  * Measured at local[32], sf0.1: per-batch fixed cost ~0.6-0.9 s
+  * regardless of state partitions, codegen or checkpoint filesystem —
+  * the incremental micro-batch machinery.
   * Not registered; dev utility like [[RecallProbe]].
   */
 object StreamProbe {
   def main(args: Array[String]): Unit = {
+    val name = args.headOption.getOrElse("stream_left_outer_join")
+    val fn = graft.SparkEntry.queries.getOrElse(name, sys.error(s"unknown query $name"))
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = Sessions.local("streamprobe", cpus.toInt)
-    spark.sparkContext.setLogLevel("WARN")
-    import java.nio.file.Files
-    val cut = to_timestamp(lit("2024-01-15 00:00:00"))
-    val base = graft.engine.Tables.events(spark, sfDir)
-      .filter(col("event_type").isin("click", "purchase"))
-      .select(col("event_id"), col("user_id"), col("ts"),
-        when(col("event_type") === "click", "c0")
-          .when(col("ts") < cut, "p1").otherwise("p2").as("__b"))
-    val in = Files.createTempDirectory("graft-streamprobe")
-    val clickDir = Files.createDirectories(in.resolve("clicks"))
-    val purchDir = Files.createDirectories(in.resolve("purchases"))
-    def dump(df: org.apache.spark.sql.DataFrame, dir: java.nio.file.Path, name: String, mtime: Long): Unit = {
-      val tmp = Files.createTempDirectory("sp-out")
-      df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-      val part = tmp.toFile.listFiles().filter(_.getName.endsWith(".parquet")).head
-      val dst = dir.resolve(s"$name.parquet")
-      Files.move(part.toPath, dst)
-      dst.toFile.setLastModified(mtime)
-    }
-    val t0 = 1700000000000L
-    dump(base.filter(col("__b") === "c0").drop("__b"), clickDir, "c0", t0)
-    dump(base.filter(col("__b") === "p1").drop("__b"), purchDir, "p1", t0)
-    def sentinel(uid: Long, day: String) =
-      spark.range(1).select(lit(uid).as("event_id"), lit(uid).as("user_id"),
-        to_timestamp(lit(s"2024-06-$day 00:00:00")).as("ts"))
-    // shipped layout: the purchase watermark sentinel rides IN p2's file
-    dump(base.filter(col("__b") === "p2").drop("__b")
-      .unionByName(sentinel(-2L, "02")), purchDir, "p2", t0 + 1000)
-    dump(sentinel(-1L, "01"), clickDir, "c1", t0 + 1000)
-    dump(sentinel(-3L, "03"), purchDir, "p4", t0 + 2000)
-
-    val ioSchema = base.drop("__b").schema
-    spark.conf.set("spark.sql.codegen.wholeStage", sys.env.getOrElse("SP_WSCG", "true"))
-    for (round <- 1 to 3) {
-      spark.conf.set("spark.sql.shuffle.partitions", sys.env.getOrElse("SP_PARTS", "2"))
-      val ckpt = Files.createTempDirectory(java.nio.file.Paths.get(sys.env.getOrElse("SP_CKPT_ROOT", "/tmp")), "sp-ckpt")
-      val tStart = System.nanoTime()
-      val cs = spark.readStream.schema(ioSchema)
-        .option("maxFilesPerTrigger", 1).parquet(clickDir.toString)
-        .select(col("event_id").as("click_id"), col("user_id"), col("ts").as("click_ts"))
-        .withWatermark("click_ts", "1 hour")
-      val ps = spark.readStream.schema(ioSchema)
-        .option("maxFilesPerTrigger", 1).parquet(purchDir.toString)
-        .select(col("event_id").as("purchase_id"), col("user_id").as("p_user_id"),
-          col("ts").as("purchase_ts"))
-        .withWatermark("purchase_ts", "1 hour")
-      val q = cs.join(ps,
-          col("user_id") === col("p_user_id") &&
-            col("purchase_ts") >= col("click_ts") &&
-            col("purchase_ts") <= col("click_ts") + expr("INTERVAL 4 HOURS"),
-          "leftOuter")
-        .writeStream.outputMode("append").format("memory")
-        .queryName(s"sp_$round")
-        .option("checkpointLocation", ckpt.toString)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      val total = (System.nanoTime() - tStart) / 1e9
-      println(f"[probe] round $round total=$total%.2f s, batches=${q.recentProgress.length}")
-      q.recentProgress.foreach { p =>
-        val dur = p.durationMs
-        println(s"[probe]   batch ${p.batchId}: trigger=${dur.get("triggerExecution")}ms " +
-          s"addBatch=${dur.getOrDefault("addBatch", -1L)}ms " +
-          s"getBatch=${dur.getOrDefault("getBatch", -1L)}ms " +
-          s"commit=${dur.getOrDefault("commitOffsets", -1L)}ms " +
-          s"stateRows=${p.stateOperators.headOption.map(_.numRowsTotal).getOrElse(-1L)} " +
+    spark.streams.addListener(new StreamingQueryListener {
+      override def onQueryStarted(e: QueryStartedEvent): Unit = ()
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
+      override def onQueryProgress(e: QueryProgressEvent): Unit = {
+        val p = e.progress
+        val phases = p.durationMs.asScala.toSeq.sortBy(_._1)
+          .map { case (k, v) => s"$k=${v}ms" }.mkString(" ")
+        println(s"[probe]   ${Option(p.name).getOrElse(p.id)} batch ${p.batchId}: " +
+          s"$phases stateRows=${p.stateOperators.map(_.numRowsTotal).sum} " +
           s"rows=${p.numInputRows}")
       }
-      spark.catalog.dropTempView(s"sp_$round")
+    })
+    for (round <- 1 to 3) {
+      val t0 = System.nanoTime()
+      fn(spark, sfDir).count()
+      println(f"[probe] $name round $round total=${(System.nanoTime() - t0) / 1e9}%.2f s")
     }
     spark.stop()
   }

@@ -48,11 +48,16 @@ class ClusterTuningSpec extends AnyFunSuite {
   test("parallelism sizing (r21): local scan floor is the measured 8, cluster floor is total cores") {
     // local: core-derived scan splits shred page-cached fixture files
     // into ~350 KB tasks at local[32] (measured: full suite 261→225 s
-    // with the floor at 8); the knob is env-overridable for A/Bs
+    // with the floor at 8); tuneConf is pure — the env override applies
+    // in Sessions.tune only
     val local = Sessions.tuneConf("32")
     assert(local("spark.sql.files.minPartitionNum") == "8")
-    assert(local("spark.sql.adaptive.coalescePartitions.parallelismFirst") == "true")
-    assert(local("spark.sql.adaptive.coalescePartitions.minPartitionSize") == "1m")
+    // AQE coalescing runs on Spark 4.1's own defaults, which are the
+    // measured winners: the session must see exactly those (true, and
+    // 1 MB — which the runtime conf renders in bytes)
+    assert(Seq("parallelismFirst", "minPartitionSize").map(k =>
+        SparkSpec.session.conf.get(s"spark.sql.adaptive.coalescePartitions.$k")) ==
+      Seq("true", "1048576b"))
     // cluster: a small input must still engage the whole fleet, and at
     // volume the byte-derived split count dominates any floor
     val o = Sessions.clusterConf(executors = 10, coresPerExecutor = 4)

@@ -13,6 +13,12 @@ class QueriesSmokeSpec extends SparkSpec {
       assert(a.nonEmpty || name == "dedup_ngram_jaccard" || name == "emb_neardup_pairs",
         s"$name returned 0 rows")
       assert(a.toSeq === b.toSeq, s"$name is not deterministic across runs")
+      // streaming runs clean up after themselves: no live query and no
+      // memory-sink view outlives the call
+      val leftViews = spark.catalog.listTables().collect()
+        .filter(t => t.isTemporary && t.name.startsWith("graft_stream_")).map(_.name)
+      assert(spark.streams.active.isEmpty && leftViews.isEmpty,
+        s"$name left streams ${spark.streams.active.map(_.name).toSeq} / views ${leftViews.toSeq}")
     }
   }
 

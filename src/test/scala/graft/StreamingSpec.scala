@@ -626,4 +626,52 @@ class StreamingSpec extends SparkSpec {
       } finally scala.util.Try(spark.catalog.dropTempView("rocksdb_upd"))
     } finally old.fold(spark.conf.unset(key))(v => spark.conf.set(key, v))
   }
+
+  test("the AvailableNow runner cleans up when a micro-batch throws") {
+    import graft.streaming.StreamingOps.{runAvailableNow, Sink}
+    val inDir = tmpDir("graft-runner-in")
+    Tables.events(spark, sfDir).select(col("event_id"))
+      .write.mode(SaveMode.Overwrite).parquet(s"$inDir/f1")
+    val boom = udf((id: Long) => RunnerCleanupProbe.failBatch(id))
+    val err = intercept[Exception] {
+      runAvailableNow(spark, RunnerCleanupProbe.tag, Map.empty, Sink.Memory("append")) {
+        spark.readStream.schema("event_id BIGINT").parquet(s"$inDir/*")
+          .select(boom(col("event_id")).as("x"))
+      }
+    }
+    val chain = Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+      .map(e => String.valueOf(e.getMessage)).mkString(" | ")
+    assert(chain.contains("boom in micro-batch"), s"the batch error must reach the caller: $chain")
+    assert(RunnerCleanupProbe.seen.get.size == 1,
+      s"the runner's own checkpoint must exist while the batch runs: ${RunnerCleanupProbe.seen.get}")
+    assert(RunnerCleanupProbe.checkpoints().isEmpty, "the runner's checkpoint outlived the failed run")
+    assert(spark.streams.active.isEmpty, "the failed query is still active")
+    assert(!spark.catalog.listTables().collect()
+      .exists(t => t.isTemporary && t.name.startsWith("graft_stream_")),
+      "the memory-sink view outlived the failed run")
+  }
+}
+
+/** Shared record for the runner cleanup test: the failing UDF lists the
+  * runner's temp checkpoints from INSIDE the micro-batch (local mode runs
+  * tasks in the test's own JVM, so this object is shared).
+  */
+object RunnerCleanupProbe {
+  val tag = "specboom"
+  val seen = new java.util.concurrent.atomic.AtomicReference[Seq[String]](Nil)
+
+  def checkpoints(): Seq[String] = {
+    val ls = java.nio.file.Files.list(
+      java.nio.file.Paths.get(System.getProperty("java.io.tmpdir")))
+    try {
+      import scala.jdk.CollectionConverters._
+      ls.iterator().asScala.map(_.getFileName.toString)
+        .filter(_.startsWith(s"graft-stream-$tag-ckpt")).toList
+    } finally ls.close()
+  }
+
+  def failBatch(id: Long): Long = {
+    seen.set(checkpoints())
+    throw new IllegalStateException(s"boom in micro-batch at event $id")
+  }
 }
