@@ -2,8 +2,9 @@ package graft.pipeline
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.operators.MergeOps
 
@@ -25,15 +26,20 @@ import graft.operators.MergeOps
   *   snapshots/            — append-only aggregate snapshot rows
   *                           (launch_aggregations analog, sql/init.sql:23-42).
   *
+  * What lives where: the disk holds the layout above, the truth a restart
+  * reads. A `Store` keeps in memory the latest version, the watermark, the
+  * launches schema and the latest version's row count. Each is read from
+  * disk once, on first use, with the reads a fresh Store always made; the
+  * Store's own writes keep it current after that, so reading state runs no
+  * Spark job. That needs ONE writer per store root: a write under the root
+  * by anything but this Store instance is not seen.
+  *
   * Scale notes: the only wide operations are the merge (one shuffle on the
-  * key) and the snapshot aggregate (map-side partial + tiny final). The
-  * early-exit probe is a MAX over the source's watermark column — answered
-  * from parquet footer statistics WHEN the caller passes a raw-column
-  * source (`Tables.eventsSince` exists for exactly that); over a
-  * derived/converted ts column (e.g. `Tables.events`' nanos→micros
-  * rewrite) it degrades to a narrow single-column scan — still the moral
-  * equivalent of the reference's 1-API-call change detection (~0.5s
-  * no-new-data path, README.md:263-267), just not footer-free.
+  * key) and the snapshot aggregate (map-side partial + tiny final). A run's
+  * Spark work depends on the batch, not on the store's history: one
+  * aggregate over the source (change detection + batch metrics), the merge
+  * write, the state append, and the snapshot aggregate + append; the
+  * row counts come from that snapshot, not from extra scans.
   */
 object IncrementalPipeline {
 
@@ -66,27 +72,50 @@ object IncrementalPipeline {
 
     private def exists(p: String): Boolean = localFile(p).exists()
 
-    def latestVersion: Option[Long] = {
+    private var version: Option[Long] = {
       val d = localFile(launchesRoot)
       if (!d.exists()) None
       else d.listFiles().filter(_.getName.startsWith("v="))
-        .map(_.getName.stripPrefix("v=").toLong).sorted.lastOption
+        .map(_.getName.stripPrefix("v=").toLong).maxOption
+    }
+    private var schema = Option.empty[StructType]
+    private var rows = Option.empty[Long]
+    // newest state row as (updated_at, last_fetched_ts): the disk's newest
+    // (read once) or a newer one this Store appended
+    private lazy val stateOnDisk: Option[(Timestamp, Timestamp)] =
+      if (!exists(stateDir)) None
+      else spark.read.parquet(stateDir)
+        .orderBy(col("updated_at").desc, col("last_fetched_ts").desc)
+        .limit(1).collect()
+        .headOption.map(r => (r.getAs[Timestamp]("updated_at"), r.getAs[Timestamp]("last_fetched_ts")))
+    private var stateAppended = Option.empty[(Timestamp, Timestamp)]
+
+    def latestVersion: Option[Long] = version
+
+    def launches: Option[DataFrame] = version.map { v =>
+      val df = schema.fold(spark.read)(st => spark.read.schema(st)).parquet(s"$launchesRoot/v=$v")
+      schema = Some(df.schema)
+      df
     }
 
-    def launches: Option[DataFrame] =
-      latestVersion.map(v => spark.read.parquet(s"$launchesRoot/v=$v"))
+    /** Rows of the latest version (0 when there is none). */
+    def rowCount: Long = rows.getOrElse {
+      val n = launches.map(_.count()).getOrElse(0L)
+      rows = Some(n)
+      n
+    }
 
-    def writeLaunches(df: DataFrame, runId: Long): Unit =
+    def writeLaunches(df: DataFrame, runId: Long): Unit = {
       df.write.mode(SaveMode.Overwrite).parquet(s"$launchesRoot/v=$runId")
+      version = (version ++ Some(runId)).maxOption
+      schema = Some(df.schema)
+      rows = None
+    }
 
     /** High-water mark: latest state row, epoch default when absent
       * (src/database.py:83-87). */
     def watermark: Timestamp =
-      if (!exists(stateDir)) new Timestamp(0L)
-      else spark.read.parquet(stateDir)
-        .orderBy(col("updated_at").desc, col("last_fetched_ts").desc)
-        .limit(1).collect()
-        .headOption.map(_.getTimestamp(0)).getOrElse(new Timestamp(0L))
+      (stateOnDisk ++ stateAppended).maxOption.map(_._2).getOrElse(new Timestamp(0L))
 
     /** State rows carry the reference's run identifier
       * (`pipeline_<ts>_<hex8>`, src/aggregations.py:51-52) — observability
@@ -99,10 +128,16 @@ object IncrementalPipeline {
         .withColumn("run_label",
           graft.functions.Scalars.runLabel(org.apache.spark.sql.functions.col("updated_at")))
         .write.mode(SaveMode.Append).parquet(stateDir)
+      stateAppended = (stateAppended ++ Some((new Timestamp(runId), lastFetched))).maxOption
     }
 
-    def appendSnapshot(row: DataFrame): Unit =
-      row.write.mode(SaveMode.Append).parquet(snapshotsDir)
+    /** Appends a snapshot row of the latest version; its `total_events`
+      * is that version's row count. */
+    def appendSnapshot(row: Row): Unit = {
+      spark.createDataFrame(java.util.List.of(row), row.schema)
+        .write.mode(SaveMode.Append).parquet(snapshotsDir)
+      rows = Some(row.getAs[Long]("total_events"))
+    }
 
     def snapshots: DataFrame = spark.read.parquet(snapshotsDir)
   }
@@ -130,58 +165,43 @@ object IncrementalPipeline {
     * deterministic values; production passes epoch millis).
     */
   def run(store: Store, source: DataFrame, runId: Long): RunResult = {
-    val spark = store.spark
     val wm = store.watermark
     val isInitial = store.latestVersion.isEmpty
 
-    // Change detection / early exit: one MAX probe (src/ingest.py:211-233
-    // analog; footer-stat-answerable when the caller's source exposes the
-    // RAW parquet column — Tables.eventsSince exists for exactly that; a
-    // derived/converted ts column costs a narrow column scan instead).
-    // Strictness contract, mirroring the reference's newer-than check: a
-    // source max EQUAL to the watermark reads as no-new-data, i.e. rows
-    // at the boundary are assumed re-deliveries of the batch that SET the
-    // watermark. A writer adding a genuinely-new row at-or-before the
-    // current watermark violates the feed contract (the `>=` refetch
-    // below only shields boundary ties when newer data arrives with them).
-    val sourceMax = source.agg(max(col("ts"))).collect().head.getTimestamp(0)
-    if (!isInitial && (sourceMax == null || !sourceMax.after(wm)))
-      return RunResult("no_new_data", 0, 0, 0,
-        store.launches.map(_.count()).getOrElse(0L), Some(wm))
-
-    // Incremental fetch past the watermark: `>=` + idempotent merge (the
-    // reference's server path, src/api.py:115 — SURVEY.md §7.4-4).
-    val incoming = if (isInitial) source else source.filter(col("ts") >= lit(wm))
-    // batch metrics in ONE aggregate pass (found, valid, valid max) — the
-    // three separate actions re-scanned the source three times (review r8)
-    val batch = incoming.filter(isValid)
-    val stats = incoming.agg(
-        count(lit(1)).as("found"),
-        count(when(isValid, 1)).as("valid"),
-        max(when(isValid, col("ts"))).as("bmax"))
+    // ONE aggregate pass answers change detection and the batch metrics:
+    // the source max (early exit) and, over the rows past the watermark
+    // (all rows on the initial load), found, valid and the valid max.
+    // Change detection mirrors the reference's newer-than check
+    // (src/ingest.py:211-233): a source max EQUAL to the watermark reads as
+    // no-new-data, i.e. rows at the boundary are assumed re-deliveries of
+    // the batch that SET the watermark. A writer adding a genuinely-new row
+    // at-or-before the current watermark violates the feed contract (the
+    // `>=` refetch only shields boundary ties when newer data arrives with
+    // them). The fetch itself is `>=` + idempotent merge (the reference's
+    // server path, src/api.py:115 — SURVEY.md §7.4-4).
+    val fetched = if (isInitial) lit(true) else col("ts") >= lit(wm)
+    val stats = source.agg(
+        max(col("ts")),
+        count(when(fetched, 1)),
+        count(when(fetched && isValid, 1)),
+        max(when(fetched && isValid, col("ts"))))
       .collect().head
-    val newFound = stats.getLong(0)
-    val valid = stats.getLong(1)
-    val batchMax = stats.getTimestamp(2)
+    val sourceMax = stats.getTimestamp(0)
+    if (!isInitial && (sourceMax == null || !sourceMax.after(wm)))
+      return RunResult("no_new_data", 0, 0, 0, store.rowCount, Some(wm))
+    val newFound = stats.getLong(1)
+    val valid = stats.getLong(2)
+    val batchMax = stats.getTimestamp(3)
 
-    val (merged, inserted) = store.launches match {
-      case Some(existing) =>
-        val m = MergeOps.mergeByKey(existing, batch, "event_id", "ts")
-        val ins = MergeOps.newKeyCount(existing, batch, "event_id")
-          .collect().head.getLong(0)
-        (m, ins)
-      case None =>
-        // the initial load must dedup by key exactly like every later
-        // merge (the reference's PK upsert always does) and report
-        // `inserted` as a KEY count, not a row count — an at-least-once
-        // feed re-delivering a key in batch 1 previously persisted both
-        // rows (review r8); limit(0) supplies the empty existing side
-        (MergeOps.mergeByKey(batch.limit(0), batch, "event_id", "ts"),
-          batch.select("event_id").distinct().count())
-    }
-    store.writeLaunches(merged, runId)
-    val table = spark.read.parquet(s"${store.launchesRoot}/v=$runId")
-    val total = table.count()
+    // Every version holds one row per key and a merge never drops a key, so
+    // the genuinely-new keys are the table's growth (the reference counts
+    // them by before/after COUNT(*) too, src/database.py:164-190). The
+    // initial load dedups by key exactly like every later merge: limit(0)
+    // supplies the empty existing side.
+    val batch = source.filter(fetched && isValid)
+    val totalBefore = if (isInitial) 0L else store.rowCount
+    store.writeLaunches(MergeOps.mergeByKey(
+      store.launches.getOrElse(batch.limit(0)), batch, "event_id", "ts"), runId)
 
     // Watermark advance to batch max (src/ingest.py:389-409).
     val newWm = if (batchMax != null) batchMax else wm
@@ -189,7 +209,7 @@ object IncrementalPipeline {
 
     // E2: the eight snapshot metrics in ONE aggregate pass + append
     // (vs the reference's 4-5 Postgres round-trips, SURVEY.md §3-E2).
-    val snapshot = table.agg(
+    val snapshot = store.launches.get.agg(
         count(lit(1)).as("total_events"),
         count(when(col("event_type") === "purchase", 1)).as("total_purchases"),
         count(when(col("event_type") === "error", 1)).as("total_errors"),
@@ -200,9 +220,11 @@ object IncrementalPipeline {
       .withColumn("snapshot_type", lit(if (isInitial) "initial" else "incremental"))
       .withColumn("events_added_in_batch", lit(valid).cast("long"))
       .withColumn("pipeline_run_id", lit(runId))
+      .collect().head
     store.appendSnapshot(snapshot)
+    val total = snapshot.getLong(0)
 
     RunResult(if (isInitial) "initial_load" else "success",
-      newFound, newFound - valid, inserted, total, Some(newWm))
+      newFound, newFound - valid, total - totalBefore, total, Some(newWm))
   }
 }

@@ -55,14 +55,11 @@ object StreamingPipeline {
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         batches += 1
-        val merged = store.launches match {
-          case Some(existing) =>
-            graft.operators.MergeOps.mergeByKey(existing, batch, "event_id", "ts")
-          case None => batch
-        }
-        // Materialize before the versioned write (foreachBatch may be
-        // re-invoked on failure; versioned dirs keep replays idempotent).
-        store.writeLaunches(merged, batchId)
+        // the first batch dedups by key like every later one (limit(0) is
+        // the empty existing side), so each version holds one row per key;
+        // versioned dirs keep a replayed batchId idempotent
+        store.writeLaunches(graft.operators.MergeOps.mergeByKey(
+          store.launches.getOrElse(batch.limit(0)), batch, "event_id", "ts"), batchId)
         ()
       }
       .start()

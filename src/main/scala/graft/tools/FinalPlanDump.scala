@@ -29,7 +29,9 @@ object FinalPlanDump {
     Files.createDirectories(outDir)
     names.foreach { n =>
       val df = graft.SparkEntry.queries(n)(spark, dir)
-      df.count() // execute so the adaptive plan finalizes
+      // collect() executes THIS QueryExecution, so its adaptive plan
+      // finalizes; count() would run a derived one and leave it initial
+      df.collect()
       val qe = df.queryExecution
       val txt = new StringBuilder
       txt ++= s"== $n — FINAL adaptive plan (post-execution, sf dir $dir, local[$cpus]) ==\n\n"

@@ -117,4 +117,62 @@ class PipelineSpec extends SparkSpec {
     assert(r2.status === "success", "file:-URI store lost its history")
     assert(r2.totalAfter === 3L)
   }
+
+  private val t0 = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
+  private def ts(min: Long) = new java.sql.Timestamp(t0.getTime + min * 60000L)
+  /** Events (key, minutes past t0, value), one user per key. */
+  private def feed(rows: (Long, Long, Double)*) = {
+    import spark.implicits._
+    rows.map { case (k, m, v) => (k, ts(m), v, "view", k) }
+      .toDF("event_id", "ts", "value", "event_type", "user_id")
+  }
+  private def launchRows(df: org.apache.spark.sql.DataFrame): Set[(Long, Double)] =
+    df.collect().map(r => r.getAs[Long]("event_id") -> r.getAs[Double]("value")).toSet
+
+  test("a fresh Store over an old root resumes exactly where the old one stood") {
+    // two roots with the same two-run history
+    def history(root: String): Store = {
+      val store = new Store(spark, root)
+      IncrementalPipeline.run(store, feed((1L, 0, 1.0), (2L, 1, 2.0)), runId = 1L)
+      IncrementalPipeline.run(store, feed((2L, 5, 3.0), (3L, 6, 4.0)), runId = 2L)
+      store
+    }
+    val old = history(tmpDir("graft-pipe-old"))
+    val restartRoot = tmpDir("graft-pipe-restart")
+    history(restartRoot)
+    val fresh = new Store(spark, restartRoot)
+    assert(fresh.watermark === old.watermark)
+    assert(fresh.latestVersion === old.latestVersion)
+    assert(launchRows(fresh.launches.get) === launchRows(old.launches.get))
+
+    // the next run from the fresh Store returns what the old one returns
+    val next = feed((3L, 9, 5.0), (4L, 10, 6.0))
+    val r = IncrementalPipeline.run(fresh, next, runId = 3L)
+    assert(r === IncrementalPipeline.run(old, next, runId = 3L))
+    assert(r === IncrementalPipeline.RunResult("success", 2, 0, 1, 4, Some(ts(10))))
+    assert(IncrementalPipeline.run(new Store(spark, restartRoot), next, runId = 4L) ===
+      IncrementalPipeline.RunResult("no_new_data", 0, 0, 0, 4, Some(ts(10))))
+  }
+
+  test("a row at exactly the watermark is refetched; a batch whose max is the watermark is no new data") {
+    val store = new Store(spark, tmpDir("graft-pipe-boundary"))
+    val w = ts(10)
+    assert(IncrementalPipeline.run(store, feed((1L, 0, 1.0), (2L, 10, 2.0)), runId = 1L)
+      .watermark === Some(w))
+
+    // one re-delivered row at exactly W and one newer row with a new key
+    val r = IncrementalPipeline.run(store, feed((2L, 10, 2.0), (3L, 11, 3.0)), runId = 2L)
+    assert(r.status === "success")
+    assert(r.newFound === 2L)
+    assert(r.inserted === 1L)
+    assert(r.totalAfter === 3L)
+    assert(r.watermark === Some(ts(11)))
+    assert(store.watermark === ts(11))
+
+    // a batch whose maximum equals the watermark
+    val r2 = IncrementalPipeline.run(store, feed((4L, 5, 4.0), (5L, 11, 5.0)), runId = 3L)
+    assert(r2.status === "no_new_data")
+    assert(r2.totalAfter === 3L)
+    assert(store.latestVersion === Some(2L))
+  }
 }

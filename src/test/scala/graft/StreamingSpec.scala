@@ -41,7 +41,10 @@ class StreamingSpec extends SparkSpec {
 
     // second AvailableNow pass with no new files: checkpoint short-circuits
     val before = store.latestVersion
-    StreamingPipeline.runAvailableNow(spark, ev.schema, s"$inDir/*", store, ckpt)
+    assert(StreamingPipeline.runAvailableNow(spark, ev.schema, s"$inDir/*", store, ckpt) === 0L)
+    assert(store.latestVersion === before)
+    // the remembered version is the one on disk
+    assert(new Store(spark, root).latestVersion === before)
     assert(store.launches.get.count() === ev.count())
   }
 
