@@ -355,7 +355,9 @@ object GraftStore {
     */
   private[graft] def dvsRef(name: String): Option[Map[Int, Array[Long]]] =
     stores.get(name).map(_.dvs)
-  /** Test hook: live store keys under a prefix (shard enumeration). */
+  /** Live store keys under a prefix, sorted — shard enumeration
+    * ([[GraftCatalog.shardKeys]]) and a test hook.
+    */
   private[graft] def keysWithPrefix(prefix: String): Seq[String] =
     stores.keys.filter(_.startsWith(prefix)).toSeq.sorted
   private[graft] def eqDeleteCount(name: String): Int =
@@ -785,7 +787,7 @@ object GraftStore {
     case g: GraftStoreTable =>
       Some(s"${g.storeKey}@v${versionCount(g.storeKey)}")
     case p: GraftPartitionedTable =>
-      val parts = stores.keys.filter(_.startsWith(p.tableKey + "#p=")).toSeq.sorted
+      val parts = GraftCatalog.shardKeys(p.tableKey)
       Some(parts.map(k => s"$k@v${versionCount(k)}")
         .mkString(s"${p.tableKey}[", ",", "]"))
     case _ => None
@@ -841,6 +843,31 @@ object GraftStore {
       }
       override def close(): Unit = ()
     }
+  }
+
+  /** One connector-writer input row, copied out into a fresh
+    * `Array[Any]` of `schema`'s width. Every buffer-backed value
+    * (UTF8String, UnsafeArrayData/MapData, nested UnsafeRow) is a VIEW
+    * into the reused input row's transient bytes — copy each out, or
+    * the committed rows silently alias whatever the writer sees next
+    * (ADVICE r11). copy() on the unsafe variants duplicates the backing
+    * bytes; primitives/Decimal/CalendarInterval are safe. A plain loop:
+    * the output array is the only per-row allocation.
+    */
+  private[sources] def copyRow(r: InternalRow, schema: StructType): Array[Any] = {
+    val vals = new Array[Any](schema.length)
+    var i = 0
+    while (i < schema.length) {
+      vals(i) = r.get(i, schema(i).dataType) match {
+        case u: org.apache.spark.unsafe.types.UTF8String => u.copy()
+        case a: org.apache.spark.sql.catalyst.util.ArrayData => a.copy()
+        case m: org.apache.spark.sql.catalyst.util.MapData => m.copy()
+        case row: InternalRow => row.copy()
+        case other => other
+      }
+      i += 1
+    }
+    vals
   }
 
   /** Per-field EXISTENCE-DEFAULT pad of a logical schema, resolved from
@@ -1190,22 +1217,7 @@ private[sources] class GraftStoreStreamingWrite(name: String,
     val s = schema
     (_: Int, _: Long, _: Long) => new DataWriter[InternalRow] {
       private val buf = scala.collection.mutable.ArrayBuffer.empty[Array[Any]]
-      override def write(r: InternalRow): Unit = {
-        val vals = new Array[Any](s.length)
-        var i = 0
-        while (i < s.length) {
-          val v = r.get(i, s(i).dataType)
-          vals(i) = v match {
-            case u: org.apache.spark.unsafe.types.UTF8String => u.copy()
-            case a: org.apache.spark.sql.catalyst.util.ArrayData => a.copy()
-            case m: org.apache.spark.sql.catalyst.util.MapData => m.copy()
-            case row: InternalRow => row.copy()
-            case other => other
-          }
-          i += 1
-        }
-        buf += vals
-      }
+      override def write(r: InternalRow): Unit = buf += GraftStore.copyRow(r, s)
       override def commit(): WriterCommitMessage = GraftStoreCommit(buf.toArray)
       override def abort(): Unit = buf.clear()
       override def close(): Unit = ()
@@ -1427,28 +1439,7 @@ private[sources] class GraftStoreBatchWrite(
     val s = schema
     (_: Int, _: Long) => new DataWriter[InternalRow] {
       private val buf = scala.collection.mutable.ArrayBuffer.empty[Array[Any]]
-      override def write(r: InternalRow): Unit = {
-        val vals = new Array[Any](s.length)
-        var i = 0
-        while (i < s.length) {
-          // materialize per-field: every buffer-backed value (UTF8String,
-          // UnsafeArrayData/MapData, nested UnsafeRow) is a VIEW into the
-          // reused input row's transient bytes — copy each out, or the
-          // committed rows silently alias whatever the writer sees next
-          // (ADVICE r11). copy() on the unsafe variants duplicates the
-          // backing bytes; primitives/Decimal/CalendarInterval are safe.
-          val v = r.get(i, s(i).dataType)
-          vals(i) = v match {
-            case u: org.apache.spark.unsafe.types.UTF8String => u.copy()
-            case a: org.apache.spark.sql.catalyst.util.ArrayData => a.copy()
-            case m: org.apache.spark.sql.catalyst.util.MapData => m.copy()
-            case row: InternalRow => row.copy()
-            case other => other
-          }
-          i += 1
-        }
-        buf += vals
-      }
+      override def write(r: InternalRow): Unit = buf += GraftStore.copyRow(r, s)
       override def commit(): WriterCommitMessage = GraftStoreCommit(buf.toArray)
       override def abort(): Unit = buf.clear()
       override def close(): Unit = ()

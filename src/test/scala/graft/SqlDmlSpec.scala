@@ -1103,4 +1103,65 @@ class SqlDmlSpec extends SparkSpec {
       assert(spark.table("graft_cat.spec.wd2").count() === survivors)
     } finally spark.sql("DROP TABLE graft_cat.spec.wd2")
   }
+
+  /** Every `CALL graft_cat.system.*` procedure with its parameters, in
+    * declaration order: (name, [(parameter, type)]).
+    */
+  private val procedureParams: Seq[(String, Seq[(String, String)])] = Seq(
+    "expire_versions" -> Seq("table" -> "string", "keep_last" -> "int"),
+    "expire_older_than" -> Seq("table" -> "string", "older_than" -> "string"),
+    "compact" -> Seq("table" -> "string", "partition" -> "string"),
+    "create_branch" -> Seq("table" -> "string", "branch" -> "string"),
+    "publish_branch" -> Seq("table" -> "string", "branch" -> "string"),
+    "publish_tables" -> Seq("refs" -> "string"),
+    "clone_table" -> Seq("source" -> "string", "target" -> "string"),
+    "drop_branch" -> Seq("table" -> "string", "branch" -> "string"),
+    "rollback" -> Seq("table" -> "string", "version" -> "int"),
+    "cluster" -> Seq("table" -> "string", "sort_col" -> "string",
+      "target_batches" -> "int"),
+    "history" -> Seq("table" -> "string"),
+    "create_tag" -> Seq("table" -> "string", "tag" -> "string"),
+    "drop_tag" -> Seq("table" -> "string", "tag" -> "string"),
+    "evolve_spec" -> Seq("table" -> "string", "transform" -> "string"))
+
+  test("SHOW PROCEDURES lists exactly the procedures CALL can load") {
+    cat()
+    val listed = spark.sql("SHOW PROCEDURES IN graft_cat.system").collect()
+      .map(_.getAs[String]("procedure_name")).toSet
+    assert(listed === procedureParams.map(_._1).toSet)
+    assert(listed.size === 14)
+    val err = intercept[Exception] {
+      spark.sql("CALL graft_cat.system.nope('x')").collect()
+    }
+    // Spark wraps the catalog's refusal in FAILED_TO_LOAD_ROUTINE
+    val messages = Iterator.iterate[Throwable](err)(_.getCause)
+      .takeWhile(_ != null).map(_.getMessage).mkString(" / ")
+    assert(messages.contains(
+      "requirement failed: graft catalog: unknown procedure system.nope"),
+      messages)
+  }
+
+  test("procedure parameters bind by name and position alike") {
+    cat()
+    val catalog = spark.sessionState.catalogManager.catalog("graft_cat")
+      .asInstanceOf[org.apache.spark.sql.connector.catalog.ProcedureCatalog]
+    procedureParams.foreach { case (name, want) =>
+      val bound = catalog.loadProcedure(
+        org.apache.spark.sql.connector.catalog.Identifier.of(
+          Array("system"), name)).bind(new org.apache.spark.sql.types.StructType())
+      assert(bound.name === name)
+      assert(bound.parameters().toSeq
+        .map(p => p.name -> p.dataType.simpleString) === want, name)
+    }
+    spark.range(3).toDF("id").writeTo("graft_cat.spec.phist").create()
+    try {
+      spark.range(3, 5).toDF("id").writeTo("graft_cat.spec.phist").append()
+      val positional =
+        spark.sql("CALL graft_cat.system.history('spec.phist')").collect()
+      val named = spark.sql(
+        "CALL graft_cat.system.history(table => 'spec.phist')").collect()
+      assert(positional.length === 3) // create, first write, append
+      assert(named.toSeq === positional.toSeq)
+    } finally spark.sql("DROP TABLE graft_cat.spec.phist")
+  }
 }
