@@ -123,11 +123,12 @@ object Bench {
       SparkSession.builder().master(s"local[$cpus]"), cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Warm the session (codegen, parquet reader, shuffle machinery, OS page
-    // cache for every fixture) so the first timed query doesn't carry
-    // one-time JVM/session cost — a resident cluster's steady state.
+    // cache and cached schema for every fixture) so the first timed query
+    // doesn't carry one-time JVM/session cost — a resident cluster's
+    // steady state.
     Seq("region", "nation", "customer", "supplier", "part", "orders",
       "lineitem", "events", "documents", "embeddings")
-      .foreach(t => spark.read.parquet(s"$sfDir/$t.parquet").count())
+      .foreach(t => graft.engine.Tables.table(spark, sfDir, t).count())
     spark.range(1000).groupBy((org.apache.spark.sql.functions.col("id") % 7)
       .as("k")).count().count()
     val headline = SparkEntry.headlineNames.toSet

@@ -81,13 +81,13 @@ object ResultCache {
     entries.get(key) match {
       case Some(p) =>
         hits.incrementAndGet()
-        s.read.parquet(p)
+        Tables.parquet(s, p)
       case None =>
         misses.incrementAndGet()
         val p = s"${root()}/r${seq.incrementAndGet()}"
         df.write.parquet(p)
         entries.put(key, p)
-        s.read.parquet(p)
+        Tables.parquet(s, p)
     }
   }
 }

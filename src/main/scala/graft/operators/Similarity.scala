@@ -351,8 +351,8 @@ object Similarity extends QueryModule {
     */
   private[graft] def serveStored(s: SparkSession, root: String): DataFrame = {
     VectorFunctions.register(s)
-    val centDf = s.read.parquet(s"$root/centroids")
-    val q = s.read.parquet(s"$root/queries").filter(col("query_id") === 0)
+    val centDf = Tables.parquet(s, s"$root/centroids")
+    val q = Tables.parquet(s, s"$root/queries").filter(col("query_id") === 0)
     val probeCells = q.crossJoin(broadcast(centDf))
       .select(col("cell"),
         expr(VectorFunctions.dotExpr("qe", "centroid")).as("cdist"))
@@ -360,7 +360,7 @@ object Similarity extends QueryModule {
       .limit(ivfNprobe)
       .select(col("cell")).collect().map(_.getInt(0)).toSeq
     val w = Window.partitionBy(col("query_id")).orderBy(col("cos_sim").desc, col("cand_id"))
-    s.read.parquet(s"$root/candidates")
+    Tables.parquet(s, s"$root/candidates")
       .filter(col("cell").isin(probeCells: _*))
       .crossJoin(broadcast(q))
       .select(col("query_id"), col("cand_id"), roundTo(dot("qe", "ce"), 6).as("cos_sim"))
@@ -1330,33 +1330,15 @@ object SimilarityIndex {
       cache.getOrElseUpdate(key, build.localCheckpoint())
     }
 
-  /** Cheap content fingerprint of the embeddings fixture: canonical path +
-    * file count + per-file (name, size, mtime). Keys the memo so a
-    * regenerated fixture under the same path — or the same data via a
-    * differently-spelled path — retrains instead of serving stale
-    * centroids (ADVICE r2). listFiles() can return null if the directory
-    * vanishes or loses read permission between checks — treated as empty
-    * rather than NPE (ADVICE r3). A same-second same-size regeneration
-    * can still alias (mtime granularity); acceptable for a test-fixture
-    * memo, and the file-count + byte-size terms narrow the window.
-    */
+  /** [[Tables.fingerprint]] of the embeddings fixture (the memo key of
+    * the centroid, probe and PQ caches). */
   private[graft] def fingerprint(dir: String): String =
     fingerprint(dir, "embeddings.parquet")
 
-  /** Generalized form — [[graft.operators.LexiconOps]] keys its BPE memo
-    * on documents.parquet with the same scheme (and the same
-    * mtime-granularity aliasing caveat above).
-    */
-  private[graft] def fingerprint(dir: String, table: String): String = {
-    val root = new java.io.File(s"$dir/$table")
-    val canonical = root.getCanonicalPath
-    val files: Seq[java.io.File] =
-      if (root.isDirectory)
-        Option(root.listFiles()).map(_.toSeq).getOrElse(Seq.empty).sortBy(_.getName)
-      else Seq(root)
-    canonical + "|n=" + files.size + "|" +
-      files.map(f => s"${f.getName}:${f.length}:${f.lastModified}").mkString(",")
-  }
+  /** Forwarder to [[Tables.fingerprint]], kept for the fixture memos
+    * keyed through this object. */
+  private[graft] def fingerprint(dir: String, table: String): String =
+    Tables.fingerprint(dir, table)
 
   def centroids(s: SparkSession, dir: String, k: Int): Array[Array[Double]] =
     cache.getOrElseUpdate((fingerprint(dir), k), train(s, dir, k))

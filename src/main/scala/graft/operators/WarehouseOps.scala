@@ -331,7 +331,7 @@ object WarehouseOps extends QueryModule {
         .write.parquet(s"$r/view_base")
     }
     val (oOld, oNew, lOld, lNew) = ivmSlices(s, dir, wm)
-    val base = s.read.parquet(s"$root/view_base")
+    val base = Tables.parquet(s, s"$root/view_base")
     val key = col("o_orderkey") === col("l_orderkey")
     val deltas = Seq(
       ivmMonthly(oOld.join(broadcast(lNew), key)), // ΔL probes the big O₀ scan
@@ -388,7 +388,7 @@ object WarehouseOps extends QueryModule {
         col("o_custkey"),
         floor(col("o_totalprice") * 100 + 0.5).cast("long").as("cents"))
       base.write.parquet(s"$r/base")
-      s.read.parquet(s"$r/base")
+      Tables.parquet(s, s"$r/base")
         .groupBy(col("om"), col("o_custkey"))
         .agg(sum(col("cents")).as("sum_cents"), count(lit(1)).as("n_rows"))
         .write.parquet(s"$r/mv")
@@ -399,7 +399,7 @@ object WarehouseOps extends QueryModule {
       groupKeys = Set("om", "o_custkey"),
       sums = Map("cents" -> "sum_cents"),
       countCol = "n_rows"))
-    s.read.parquet(s"$root/base")
+    Tables.parquet(s, s"$root/base")
       .groupBy(col("om"))
       .agg(count(lit(1)).as("n_orders"), sum(col("cents")).as("cents"))
       .select(col("om").as("order_month"), col("n_orders"),

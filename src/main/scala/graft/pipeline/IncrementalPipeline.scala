@@ -6,6 +6,7 @@ import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
+import graft.engine.Tables.localFile
 import graft.operators.MergeOps
 
 /** The reference's E1 control loop (run_incremental_ingestion,
@@ -51,24 +52,10 @@ object IncrementalPipeline {
       totalAfter: Long,
       watermark: Option[Timestamp])
 
-  /** Local-path view of a possibly `file:`-prefixed path — EVERY java.io
-    * access of a Spark-visible path must go through this: Store's
-    * latestVersion previously used the raw string, so a `file:` URI root
-    * made every run look like an initial load (watermark still advanced
-    * via the Spark-read state dir) and silently clobbered history
-    * (review r8); the streaming source's directory-layout check had the
-    * same blind spot (ADVICE r8). Shared so both use one spelling.
-    */
-  private[graft] def localFile(p: String): java.io.File =
-    new java.io.File(p.stripPrefix("file:"))
-
   final class Store(val spark: SparkSession, val root: String) {
     val launchesRoot = s"$root/launches"
     val stateDir     = s"$root/ingestion_state"
     val snapshotsDir = s"$root/snapshots"
-
-    private def localFile(p: String): java.io.File =
-      IncrementalPipeline.localFile(p)
 
     private def exists(p: String): Boolean = localFile(p).exists()
 

@@ -185,7 +185,7 @@ object PipelineOps extends QueryModule {
       IncrementalPipeline.run(store, ev, 2L)
     }
     def digest(v: Int): DataFrame =
-      s.read.parquet(s"$root/launches/v=$v").agg(
+      Tables.parquet(s, s"$root/launches/v=$v").agg(
         count(lit(1)).as("n_rows"),
         (sum(floor(col("value") * 100 + 0.5).cast("long")) / 100.0).as("sum_value"),
         max(unix_micros(col("ts"))).as("max_ts_us"))

@@ -124,7 +124,7 @@ class MvRollupRewrite(session: SparkSession) extends Rule[LogicalPlan] {
   }
 
   private def resolveMv(e: MvCatalog.MvEntry): Option[LogicalRelation] =
-    session.read.parquet(e.mvPath).queryExecution.analyzed match {
+    graft.engine.Tables.parquet(session, e.mvPath).queryExecution.analyzed match {
       case lr: LogicalRelation => Some(lr)
       case _ => None
     }

@@ -40,7 +40,7 @@ object StreamingOps extends QueryModule {
     */
   def streamTumblingWindow(s: SparkSession, dir: String): DataFrame = {
     val path = s"$dir/events.parquet"
-    val rawSchema = s.read.parquet(path).schema
+    val rawSchema = graft.engine.Tables.parquet(s, path).schema
     // the file stream source wants a DIRECTORY to list. A Spark-written
     // `events.parquet` is itself a directory (part-*.parquet leaves) and is
     // streamed directly; only the single-file fixture layout needs the
@@ -52,7 +52,7 @@ object StreamingOps extends QueryModule {
     // isDirectory, silently routing the directory layout into the glob
     // branch (loud via the require below, but wrong-path)
     val raw =
-      if (graft.pipeline.IncrementalPipeline.localFile(path).isDirectory)
+      if (graft.engine.Tables.localFile(path).isDirectory)
         s.readStream.schema(rawSchema).parquet(path)
       else
         s.readStream.schema(rawSchema)

@@ -23,7 +23,7 @@ object QueryProbe {
     // same warmup as Bench so rep 1 doesn't carry session-construction cost
     Seq("region", "nation", "customer", "supplier", "part", "orders",
       "lineitem", "events", "documents", "embeddings")
-      .foreach(t => spark.read.parquet(s"$sfDir/$t.parquet").count())
+      .foreach(t => graft.engine.Tables.table(spark, sfDir, t).count())
     names.foreach { name =>
       val fn = graft.SparkEntry.queries.getOrElse(name, sys.error(s"unknown query $name"))
       val ts = (1 to reps).map { _ =>
