@@ -553,8 +553,6 @@ object Dedup extends QueryModule {
       labels = next
       iter += 1
     }
-    if (sys.env.contains("GRAFT_CC_DEBUG"))
-      System.err.println(s"[cc] converged in $iter rounds")
     // surfacing non-convergence beats silently returning partial roots:
     // with hop+jump the 30-round cap covers any diameter a physical graph
     // can have, so tripping this means a logic bug, and it must fail

@@ -798,7 +798,7 @@ object LexiconOps extends QueryModule {
     // Bench's min-of-2 a memo hit would report the training operator at
     // cache-lookup cost, hiding the dataflow this entry exists to track
     val result = trainBpe(s, dir)
-    bpeCache.put(SimilarityIndex.fingerprint(dir, "documents.parquet"), result)
+    bpeCache.put(Tables.fingerprint(dir, "documents.parquet"), result)
     import s.implicits._
     result._1.toDF("merge_rank", "pair", "n_occ").orderBy("merge_rank")
   }
@@ -812,13 +812,13 @@ object LexiconOps extends QueryModule {
     .empty[String, (Seq[(Long, String, Long)], (Long, Long, Long))]
 
   /** (merge table, (n_words, n_chars, n_symbols)) — memoized per fixture
-    * (shared [[SimilarityIndex.fingerprint]] scheme) so the stats consumer
+    * (shared [[Tables.fingerprint]] scheme) so the stats consumer
     * rides the trainer's run.
     */
   private[graft] def trainedBpe(
       s: SparkSession, dir: String): (Seq[(Long, String, Long)], (Long, Long, Long)) =
     bpeCache.getOrElseUpdate(
-      SimilarityIndex.fingerprint(dir, "documents.parquet"), trainBpe(s, dir))
+      Tables.fingerprint(dir, "documents.parquet"), trainBpe(s, dir))
 
   private def trainBpe(
       s: SparkSession, dir: String): (Seq[(Long, String, Long)], (Long, Long, Long)) = {

@@ -377,7 +377,7 @@ object ModernSqlOps extends QueryModule {
     * N−1 result-sized reads.
     */
   def resultCacheServe(s: SparkSession, dir: String): DataFrame = {
-    val tag = dir + "|" + SimilarityIndex.fingerprint(dir, "lineitem.parquet")
+    val tag = dir + "|" + Tables.fingerprint(dir, "lineitem.parquet")
     def report = Tables.lineitem(s, dir)
       .groupBy(col("l_returnflag"))
       .agg(count(lit(1)).as("n_items"),

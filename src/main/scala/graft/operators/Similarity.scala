@@ -1321,7 +1321,7 @@ object SimilarityIndex {
       build: => org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
     cache.synchronized {
       val appId = s.sparkContext.applicationId
-      val key = s"$appId|$dir|${fingerprint(dir, table)}"
+      val key = s"$appId|$dir|${Tables.fingerprint(dir, table)}"
       cache.keys.filterNot(_ == key)
         .filter(k => !k.startsWith(s"$appId|") || k.startsWith(s"$appId|$dir|"))
         .foreach(k => cache.remove(k).foreach { df =>
@@ -1333,12 +1333,7 @@ object SimilarityIndex {
   /** [[Tables.fingerprint]] of the embeddings fixture (the memo key of
     * the centroid, probe and PQ caches). */
   private[graft] def fingerprint(dir: String): String =
-    fingerprint(dir, "embeddings.parquet")
-
-  /** Forwarder to [[Tables.fingerprint]], kept for the fixture memos
-    * keyed through this object. */
-  private[graft] def fingerprint(dir: String, table: String): String =
-    Tables.fingerprint(dir, table)
+    Tables.fingerprint(dir, "embeddings.parquet")
 
   def centroids(s: SparkSession, dir: String, k: Int): Array[Array[Double]] =
     cache.getOrElseUpdate((fingerprint(dir), k), train(s, dir, k))

@@ -323,8 +323,8 @@ object WarehouseOps extends QueryModule {
     */
   def ivmRefreshStored(s: SparkSession, dir: String): DataFrame = {
     val wm = ivmStoredWatermark
-    val fp = SimilarityIndex.fingerprint(dir, "lineitem.parquet") + "||" +
-      SimilarityIndex.fingerprint(dir, "orders.parquet")
+    val fp = Tables.fingerprint(dir, "lineitem.parquet") + "||" +
+      Tables.fingerprint(dir, "orders.parquet")
     val root = graft.engine.StagedRoots.of("ivmbase", dir, fp) { r =>
       val (oOld, _, lOld, _) = ivmSlices(s, dir, wm)
       ivmMonthly(oOld.join(lOld, col("o_orderkey") === col("l_orderkey")))
@@ -381,7 +381,7 @@ object WarehouseOps extends QueryModule {
     * refresh) is `ivm_refresh_stored`.
     */
   def mvRewriteRollup(s: SparkSession, dir: String): DataFrame = {
-    val fp = SimilarityIndex.fingerprint(dir, "orders.parquet")
+    val fp = Tables.fingerprint(dir, "orders.parquet")
     val root = graft.engine.StagedRoots.of("mvroll", dir, fp) { r =>
       val base = Tables.orders(s, dir).select(
         date_format(col("o_orderdate"), "yyyy-MM").as("om"),
@@ -1258,7 +1258,7 @@ object WarehouseOps extends QueryModule {
     val h = java.lang.Long.toHexString(dir.hashCode.toLong & 0xffffffffL)
     val tbl = s"graft_cbo_cust_$h"
     s.sql(s"CREATE TABLE IF NOT EXISTS $tbl USING parquet LOCATION '$dir/customer.parquet'")
-    val key = tbl + "||" + SimilarityIndex.fingerprint(dir, "customer.parquet")
+    val key = tbl + "||" + Tables.fingerprint(dir, "customer.parquet")
     if (cboAnalyzed.add(key))
       s.sql(s"ANALYZE TABLE $tbl COMPUTE STATISTICS FOR COLUMNS c_custkey, c_mktsegment, c_acctbal")
     tbl

@@ -176,7 +176,7 @@ object PipelineOps extends QueryModule {
   def storeTimeTravel(s: SparkSession, dir: String): DataFrame = {
     // staged once per fixture fingerprint via the shared StagedRoots
     // discipline (ADVICE r11: dir-keyed, superseded roots deleted)
-    val fp = graft.operators.SimilarityIndex.fingerprint(dir, "events.parquet")
+    val fp = Tables.fingerprint(dir, "events.parquet")
     val root = graft.engine.StagedRoots.of("timetravel", dir, fp) { r =>
       val store = new IncrementalPipeline.Store(s, r)
       val ev = Tables.events(s, dir)

@@ -27,7 +27,7 @@ import graft.operators.{QueryModule, RegisteredQuery}
 object StreamingOps extends QueryModule {
 
   /** Memory-sink names are per-JVM global; a counter keeps repeated
-    * invocations (Bench's warm loops, TimeOne's 3×) isolated.
+    * invocations (Bench's warm loops, Probe's reps) isolated.
     */
   private val sinkSeq = new AtomicInteger(0)
 
@@ -365,7 +365,7 @@ object StreamingOps extends QueryModule {
         build: java.nio.file.Path => Unit): java.nio.file.Path =
       java.nio.file.Paths.get(
         graft.engine.StagedRoots.of(s"layout-$layout", fixtureDir,
-          graft.operators.SimilarityIndex.fingerprint(fixtureDir, table)) { r =>
+          graft.engine.Tables.fingerprint(fixtureDir, table)) { r =>
           build(java.nio.file.Paths.get(r))
         })
   }
@@ -698,7 +698,7 @@ object StreamingOps extends QueryModule {
     val clickDir = staged.resolve("clicks")
     val purchDir = staged.resolve("purchases")
     val ioSchema = base.drop("__b").schema
-    // 4 state partitions: StreamProbe measured the knee — the
+    // 4 state partitions: Probe's per-batch lines measured the knee — the
     // join buffers ~29k click/purchase state rows in batch 1, and at 2
     // partitions addBatch is task-parallelism-starved (3.0 s total vs
     // 2.6 s at 4; 8 partitions tips back to store-lifecycle overhead,
@@ -1923,7 +1923,7 @@ object StreamingOps extends QueryModule {
     val ev = graft.engine.Tables.events(s, dir)
       .filter(col("user_id").isNotNull)
       .select(col("event_id"), col("user_id"), col("value"))
-    val fp = graft.operators.SimilarityIndex.fingerprint(dir, "events.parquet")
+    val fp = graft.engine.Tables.fingerprint(dir, "events.parquet")
     graft.engine.StagedRoots.of("stateread", dir, fp) { r =>
       val in = java.nio.file.Files.createDirectories(
         java.nio.file.Paths.get(r, "in"))
@@ -2056,7 +2056,7 @@ object StreamingOps extends QueryModule {
   private[graft] def twsStateRoot(s: SparkSession, dir: String): String = {
     import s.implicits._
     val (inDir, srcSchema) = thirdsInput(s, dir, "upd", "event_id", "user_id", "value")
-    val fp = graft.operators.SimilarityIndex.fingerprint(dir, "events.parquet")
+    val fp = graft.engine.Tables.fingerprint(dir, "events.parquet")
     graft.engine.StagedRoots.of("twsstate", dir, fp) { r =>
       val ran = runAvailableNow(s, "twssr", rocksState, Sink.Memory("update"),
           checkpoint = Some(s"$r/ckpt")) {

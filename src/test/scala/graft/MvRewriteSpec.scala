@@ -5,7 +5,7 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
 import org.apache.spark.sql.functions._
 
 import graft.engine.Tables
-import graft.operators.{SimilarityIndex, WarehouseOps}
+import graft.operators.WarehouseOps
 
 /** Plan pins for [[graft.plans.MvRollupRewrite]]: the rewrite must fire
   * (MV scanned, base absent) exactly when the derivability contract
@@ -26,7 +26,7 @@ class MvRewriteSpec extends SparkSpec {
     */
   private def stagedBase(): DataFrame = {
     WarehouseOps.mvRewriteRollup(spark, sfDir)
-    val fp = SimilarityIndex.fingerprint(sfDir, "orders.parquet")
+    val fp = Tables.fingerprint(sfDir, "orders.parquet")
     val root = graft.engine.StagedRoots.of("mvroll", sfDir, fp)(_ => ())
     spark.read.parquet(s"$root/base")
   }

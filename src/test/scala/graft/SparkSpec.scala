@@ -1,17 +1,31 @@
 package graft
 
+import java.nio.file.{Files, Path}
+import java.util.concurrent.ConcurrentLinkedQueue
+
 import org.apache.spark.sql.SparkSession
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared session for all suites (one JVM-wide session, ScalaTest default
   * sequential execution). sf0.001 fixtures keep suites fast.
   */
-trait SparkSpec extends AnyFunSuite {
+trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
   val sfDir = "/root/testdata/sf0.001"
 
-  def tmpDir(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
+  private val tmpDirs = new ConcurrentLinkedQueue[Path]()
+
+  /** A fresh temp dir, deleted when the suite ends. */
+  def tmpDir(prefix: String): String = {
+    val d = Files.createTempDirectory(prefix)
+    tmpDirs.add(d)
+    d.toString
+  }
+
+  override def afterAll(): Unit =
+    try tmpDirs.forEach(d => graft.engine.StagedRoots.deleteRecursively(d))
+    finally super.afterAll()
 
   /** Shared ScalaCheck runner for the property suites (Spark-backed
     * properties are expensive — a handful of cases each staging a tmp
