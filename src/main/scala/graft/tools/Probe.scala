@@ -32,16 +32,13 @@ object Probe {
   final case class Opts(names: Seq[String], reps: Int = 3,
       plans: Option[String] = None, rows: Option[Int] = None)
 
-  /** A Spark job: the id Spark gave its SQL execution (None outside any),
-    * task count, wall time and call site. */
-  final case class Job(id: Int, execution: Option[Long], tasks: Int, ms: Long, site: String)
   /** A SQL execution as the [[QueryExecutionListener]] reported it; `ms`
     * is -1 when it failed. */
   final case class Exec(name: String, ms: Long, qe: QueryExecution)
-  final case class Batch(query: String, id: Long, phases: Seq[(String, Long)],
-      stateRows: Long, inputRows: Long)
-  final case class Rep(buildS: Double, runS: Double, jobs: Seq[Job],
-      execs: Seq[Exec], batches: Seq[Batch])
+  /** One rep; `jobs` and `batches` hold one printed line per Spark job and
+    * per streaming micro-batch. */
+  final case class Rep(buildS: Double, runS: Double, jobs: Seq[String],
+      execs: Seq[Exec], batches: Seq[String])
 
   private val usage = "usage: Probe <q1,q2,...> [reps] [--plans <dir>] [--rows <n>]"
 
@@ -109,14 +106,9 @@ object Probe {
 
   private def report(name: String, i: Int, r: Rep): Unit = {
     println(f"[probe] $name%s rep $i: build_s=${r.buildS}%.3f run_s=${r.runS}%.3f " +
-      s"jobs=${r.jobs.size} tasks=${r.jobs.map(_.tasks).sum} sql=${r.execs.size} " +
-      s"batches=${r.batches.size}")
-    r.execs.foreach(e => println(s"[probe]   sql ${e.name} ${e.ms} ms"))
-    r.jobs.foreach(j => println(s"[probe]   job ${j.id} execution=${j.execution.getOrElse("-")} " +
-      s"tasks=${j.tasks} ${j.ms} ms ${j.site}"))
-    r.batches.foreach(b => println(s"[probe]   batch ${b.query}#${b.id} " +
-      b.phases.map { case (k, v) => s"$k=${v}ms" }.mkString(" ") +
-      s" state_rows=${b.stateRows} input_rows=${b.inputRows}"))
+      s"jobs=${r.jobs.size} sql=${r.execs.size} batches=${r.batches.size}")
+    (r.execs.map(e => s"sql ${e.name} ${e.ms} ms") ++ r.jobs ++ r.batches)
+      .foreach(line => println(s"[probe]   $line"))
   }
 
   private val SentinelProp = "graft.probe.sentinel"
@@ -127,45 +119,45 @@ object Probe {
     * [[drain]].
     */
   final class Recorder {
-    private val jobs = mutable.ArrayBuffer.empty[Job]
+    private val jobs = mutable.ArrayBuffer.empty[String]
     private val execs = mutable.ArrayBuffer.empty[Exec]
-    private val batches = mutable.ArrayBuffer.empty[Batch]
+    private val batches = mutable.ArrayBuffer.empty[String]
     private val sentinels = new AtomicInteger(0)
-    private val streamsStarted = new AtomicInteger(0)
-    private val streamsEnded = new AtomicInteger(0)
+    private val streamsRunning = new AtomicInteger(0)
 
     private def record[T](buf: mutable.ArrayBuffer[T], t: T): Unit =
       synchronized { buf += t; () }
 
-    def take(): (Seq[Job], Seq[Exec], Seq[Batch]) = synchronized {
+    def take(): (Seq[String], Seq[Exec], Seq[String]) = synchronized {
       val r = (jobs.toSeq, execs.toSeq, batches.toSeq)
       jobs.clear(); execs.clear(); batches.clear()
       r
     }
 
+    // called on the bus's one thread for its queue, so its maps need no lock
     private object jobListener extends SparkListener {
-      private case class Open(start: Long, execution: Option[Long], site: String, stages: Seq[Int])
+      private final class Open(val start: SparkListenerJobStart) { var tasks = 0 }
       private val open = mutable.Map.empty[Int, Open]
-      private val jobOfStage = mutable.Map.empty[Int, Int]
-      private val tasks = mutable.Map.empty[Int, Int]
+      private val byStage = mutable.Map.empty[Int, Open]
 
       override def onJobStart(e: SparkListenerJobStart): Unit = {
-        val prop = (k: String) => Option(e.properties).flatMap(p => Option(p.getProperty(k)))
-        if (prop(SentinelProp).isDefined) sentinels.incrementAndGet()
+        if (Option(e.properties).exists(_.getProperty(SentinelProp) != null)) sentinels.incrementAndGet()
         else {
-          e.stageIds.foreach(jobOfStage(_) = e.jobId)
-          open(e.jobId) = Open(e.time, prop("spark.sql.execution.id").map(_.toLong),
-            e.stageInfos.maxByOption(_.stageId).fold("")(_.name), e.stageIds)
+          val o = new Open(e)
+          open(e.jobId) = o
+          e.stageIds.foreach(byStage(_) = o)
         }
         ()
       }
-      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
-        jobOfStage.get(e.stageId).foreach(j => tasks(j) = tasks.getOrElse(j, 0) + 1)
-      override def onJobEnd(e: SparkListenerJobEnd): Unit =
-        open.remove(e.jobId).foreach { o =>
-          o.stages.foreach(jobOfStage.remove)
-          record(jobs, Job(e.jobId, o.execution, tasks.remove(e.jobId).getOrElse(0), e.time - o.start, o.site))
-        }
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit = byStage.get(e.stageId).foreach(_.tasks += 1)
+      override def onJobEnd(e: SparkListenerJobEnd): Unit = open.remove(e.jobId).foreach { o =>
+        val s = o.start
+        s.stageIds.foreach(byStage.remove)
+        val execution = Option(s.properties).flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
+        val site = s.stageInfos.maxByOption(_.stageId).fold("")(_.name)
+        record(jobs, s"job ${e.jobId} execution=${execution.getOrElse("-")} tasks=${o.tasks} " +
+          s"${e.time - s.time} ms $site")
+      }
     }
 
     private object execListener extends QueryExecutionListener {
@@ -179,13 +171,13 @@ object Probe {
     // through the bus's streams queue, so [[drain]] waits for a
     // termination per start
     private object streamListener extends StreamingQueryListener {
-      override def onQueryStarted(e: QueryStartedEvent): Unit = { streamsStarted.incrementAndGet(); () }
-      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = { streamsEnded.incrementAndGet(); () }
+      override def onQueryStarted(e: QueryStartedEvent): Unit = { streamsRunning.incrementAndGet(); () }
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = { streamsRunning.decrementAndGet(); () }
       override def onQueryProgress(e: QueryProgressEvent): Unit = {
         val p = e.progress
-        record(batches, Batch(Option(p.name).getOrElse(p.id.toString), p.batchId,
-          p.durationMs.asScala.toSeq.map { case (k, v) => k -> v.longValue }.sortBy(_._1),
-          p.stateOperators.map(_.numRowsTotal).sum, p.numInputRows))
+        val phases = p.durationMs.asScala.toSeq.sortBy(_._1).map { case (k, v) => s"$k=${v}ms" }
+        record(batches, s"batch ${Option(p.name).getOrElse(p.id)}#${p.batchId} ${phases.mkString(" ")} " +
+          s"state_rows=${p.stateOperators.map(_.numRowsTotal).sum} input_rows=${p.numInputRows}")
       }
     }
 
@@ -213,7 +205,7 @@ object Probe {
       sc.setLocalProperty(SentinelProp, "1")
       try sc.parallelize(Seq(1), 1).count()
       finally sc.setLocalProperty(SentinelProp, null)
-      def pending = sentinels.get <= seen || streamsEnded.get < streamsStarted.get
+      def pending = sentinels.get <= seen || streamsRunning.get > 0
       val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
       while (pending && System.nanoTime() < deadline) Thread.sleep(5)
       require(!pending, "the listener bus did not deliver the probe's events within 30 s")

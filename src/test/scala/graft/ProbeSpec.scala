@@ -35,7 +35,7 @@ class ProbeSpec extends SparkSpec {
   test("a streaming query reports its micro-batches") {
     val reps = probe("stream_tumbling_window")()
     reps.foreach(r => assert(r.batches.nonEmpty))
-    assert(reps.flatMap(_.batches).map(_.inputRows).sum > 0)
+    assert(reps.flatMap(_.batches).forall(b => "input_rows=[1-9]".r.findFirstIn(b).isDefined))
   }
 
   test("an unknown query name fails and lists the registered names") {
