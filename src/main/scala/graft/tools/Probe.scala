@@ -85,7 +85,10 @@ object Probe {
         recorder.drain(spark)
         val (jobs, execs, batches) = recorder.take()
         val rep = Rep((t1 - t0) / 1e9, (t2 - t1) / 1e9, jobs, execs, batches)
-        report(name, i, rep)
+        println(f"[probe] $name%s rep $i: build_s=${rep.buildS}%.3f run_s=${rep.runS}%.3f " +
+          s"jobs=${jobs.size} sql=${execs.size} batches=${batches.size}")
+        (execs.map(e => s"sql ${e.name} ${e.ms} ms") ++ jobs ++ batches)
+          .foreach(line => println(s"[probe]   $line"))
         rep
       }
       val totals = reps.map(r => r.buildS + r.runS).sorted
@@ -102,13 +105,6 @@ object Probe {
       opts.rows.foreach(fn(spark, sfDir).show(_, truncate = false))
       name -> reps
     } finally recorder.detach(spark)
-  }
-
-  private def report(name: String, i: Int, r: Rep): Unit = {
-    println(f"[probe] $name%s rep $i: build_s=${r.buildS}%.3f run_s=${r.runS}%.3f " +
-      s"jobs=${r.jobs.size} sql=${r.execs.size} batches=${r.batches.size}")
-    (r.execs.map(e => s"sql ${e.name} ${e.ms} ms") ++ r.jobs ++ r.batches)
-      .foreach(line => println(s"[probe]   $line"))
   }
 
   private val SentinelProp = "graft.probe.sentinel"
