@@ -66,5 +66,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectOptimizerRule(s => new graft.plans.MvRollupRewrite(s))
     ext.injectOptimizerRule(_ => graft.plans.FkJoinElimination)
     ext.injectPlannerStrategy(_ => graft.plans.AsofJoinStrategy)
+    ext.injectPlannerStrategy(_ => graft.plans.OrderedCollectStrategy)
   }
 }

@@ -6,9 +6,10 @@ import java.util.concurrent.atomic.AtomicInteger
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerTaskEnd}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.{FormattedMode, QueryExecution}
+import org.apache.spark.sql.execution.ui.{SparkListenerSQLExecutionEnd, SparkListenerSQLExecutionStart}
 import org.apache.spark.sql.streaming.StreamingQueryListener
 import org.apache.spark.sql.streaming.StreamingQueryListener._
 import org.apache.spark.sql.util.QueryExecutionListener
@@ -16,29 +17,40 @@ import org.apache.spark.sql.util.QueryExecutionListener
 import graft.{Bench, SparkEntry}
 
 /** Times registered queries on Bench's warmed session and shows where each
-  * rep's time went, as three listeners saw it: the Spark jobs and tasks,
-  * every SQL execution (statement-level timing for DML scripts), and every
-  * streaming micro-batch's phases, state rows and input rows.
+  * rep's time went, as listeners saw it: every SQL execution
+  * (statement-level timing for DML scripts) with the Spark jobs and tasks
+  * it ran, and every streaming micro-batch's phases, state rows and input
+  * rows.
   *
   * Usage: `sbt "runMain graft.tools.Probe <q1,q2,...> [reps] [--plans <dir>] [--rows <n>]"`,
   * with the fixture dir and core count read by [[Bench.warmSession]]. Per
   * rep it prints `build_s` (calling the query function) and `run_s`
-  * (`count()`, as Bench times it); per query the min and median of their
-  * sum. `--plans <dir>` writes `<dir>/<query>.txt`: the executed plan of
-  * the last SQL execution the listener saw, which has run, so an adaptive
+  * (`collect()`, the result a user of the query gets; `count()` would let
+  * Catalyst drop work such as a root sort); per query the min and median
+  * of their sum. A `sql` line names its `spark.sql.execution.id` and
+  * description, and each job line the execution it ran in (`-` for none).
+  * `--plans <dir>` writes `<dir>/<query>.txt`: the executed plan of the
+  * last query execution the listener saw, which has run, so an adaptive
   * plan is final. `--rows <n>` shows the first n result rows.
   */
 object Probe {
   final case class Opts(names: Seq[String], reps: Int = 3,
       plans: Option[String] = None, rows: Option[Int] = None)
 
-  /** A SQL execution as the [[QueryExecutionListener]] reported it; `ms`
-    * is -1 when it failed. */
-  final case class Exec(name: String, ms: Long, qe: QueryExecution)
-  /** One rep; `jobs` and `batches` hold one printed line per Spark job and
-    * per streaming micro-batch. */
-  final case class Rep(buildS: Double, runS: Double, jobs: Seq[String],
-      execs: Seq[Exec], batches: Seq[String])
+  /** A SQL execution by its `spark.sql.execution.id`; `ms` is -1 when it
+    * failed. */
+  final case class Exec(id: Long, description: String, ms: Long)
+  /** A query execution as the [[QueryExecutionListener]] reported it. */
+  final case class Plan(name: String, qe: QueryExecution)
+  /** What the listeners recorded; `jobs` and `batches` hold one printed
+    * line per Spark job and per streaming micro-batch. */
+  final case class Recorded(jobs: Seq[String], execs: Seq[Exec], batches: Seq[String], plans: Seq[Plan])
+  /** One rep. */
+  final case class Rep(buildS: Double, runS: Double, recorded: Recorded) {
+    def jobs: Seq[String] = recorded.jobs
+    def execs: Seq[Exec] = recorded.execs
+    def batches: Seq[String] = recorded.batches
+  }
 
   private val usage = "usage: Probe <q1,q2,...> [reps] [--plans <dir>] [--rows <n>]"
 
@@ -80,14 +92,13 @@ object Probe {
         val t0 = System.nanoTime()
         val df = fn(spark, sfDir)
         val t1 = System.nanoTime()
-        df.count()
+        df.collect()
         val t2 = System.nanoTime()
         recorder.drain(spark)
-        val (jobs, execs, batches) = recorder.take()
-        val rep = Rep((t1 - t0) / 1e9, (t2 - t1) / 1e9, jobs, execs, batches)
+        val rep = Rep((t1 - t0) / 1e9, (t2 - t1) / 1e9, recorder.take())
         println(f"[probe] $name%s rep $i: build_s=${rep.buildS}%.3f run_s=${rep.runS}%.3f " +
-          s"jobs=${jobs.size} sql=${execs.size} batches=${batches.size}")
-        (execs.map(e => s"sql ${e.name} ${e.ms} ms") ++ jobs ++ batches)
+          s"jobs=${rep.jobs.size} sql=${rep.execs.size} batches=${rep.batches.size}")
+        (rep.execs.map(e => s"sql ${e.id} (${e.description}) ${e.ms} ms") ++ rep.jobs ++ rep.batches)
           .foreach(line => println(s"[probe]   $line"))
         rep
       }
@@ -95,7 +106,7 @@ object Probe {
       val n = totals.size
       val median = (totals((n - 1) / 2) + totals(n / 2)) / 2
       println(f"[probe] $name%s min_s=${totals.head}%.3f median_s=$median%.3f")
-      for (dir <- opts.plans; last <- reps.last.execs.lastOption) {
+      for (dir <- opts.plans; last <- reps.last.recorded.plans.lastOption) {
         val out = Paths.get(dir, s"$name.txt")
         Files.createDirectories(out.getParent)
         Files.writeString(out, s"== $name: ${last.name}, $sfDir ==\n\n" +
@@ -118,15 +129,16 @@ object Probe {
     private val jobs = mutable.ArrayBuffer.empty[String]
     private val execs = mutable.ArrayBuffer.empty[Exec]
     private val batches = mutable.ArrayBuffer.empty[String]
+    private val plans = mutable.ArrayBuffer.empty[Plan]
     private val sentinels = new AtomicInteger(0)
     private val streamsRunning = new AtomicInteger(0)
 
     private def record[T](buf: mutable.ArrayBuffer[T], t: T): Unit =
       synchronized { buf += t; () }
 
-    def take(): (Seq[String], Seq[Exec], Seq[String]) = synchronized {
-      val r = (jobs.toSeq, execs.toSeq, batches.toSeq)
-      jobs.clear(); execs.clear(); batches.clear()
+    def take(): Recorded = synchronized {
+      val r = Recorded(jobs.toSeq, execs.toSeq, batches.toSeq, plans.toSeq)
+      jobs.clear(); execs.clear(); batches.clear(); plans.clear()
       r
     }
 
@@ -135,6 +147,19 @@ object Probe {
       private final class Open(val start: SparkListenerJobStart) { var tasks = 0 }
       private val open = mutable.Map.empty[Int, Open]
       private val byStage = mutable.Map.empty[Int, Open]
+      private val running = mutable.Map.empty[Long, SparkListenerSQLExecutionStart]
+
+      private def describe(s: SparkListenerSQLExecutionStart): String =
+        s.description.replaceAll("\\s+", " ").take(80)
+
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart => running(s.executionId) = s
+        case end: SparkListenerSQLExecutionEnd => running.remove(end.executionId).foreach { s =>
+          record(execs, Exec(s.executionId, describe(s),
+            if (end.errorMessage.exists(_.nonEmpty)) -1 else end.time - s.time))
+        }
+        case _ =>
+      }
 
       override def onJobStart(e: SparkListenerJobStart): Unit = {
         if (Option(e.properties).exists(_.getProperty(SentinelProp) != null)) sentinels.incrementAndGet()
@@ -150,17 +175,18 @@ object Probe {
         val s = o.start
         s.stageIds.foreach(byStage.remove)
         val execution = Option(s.properties).flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
+        val described = execution.flatMap(id => running.get(id.toLong)).fold("")(x => s" (${describe(x)})")
         val site = s.stageInfos.maxByOption(_.stageId).fold("")(_.name)
-        record(jobs, s"job ${e.jobId} execution=${execution.getOrElse("-")} tasks=${o.tasks} " +
+        record(jobs, s"job ${e.jobId} execution=${execution.getOrElse("-")}$described tasks=${o.tasks} " +
           s"${e.time - s.time} ms $site")
       }
     }
 
     private object execListener extends QueryExecutionListener {
       override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
-        record(execs, Exec(s"$funcName ${qe.logical.nodeName}", durationNs / 1000000, qe))
+        record(plans, Plan(s"$funcName ${qe.logical.nodeName}", qe))
       override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit =
-        record(execs, Exec(s"$funcName ${qe.logical.nodeName} failed", -1, qe))
+        record(plans, Plan(s"$funcName ${qe.logical.nodeName} failed", qe))
     }
 
     // QueryStartedEvent reaches this listener synchronously; the rest go

@@ -31,8 +31,7 @@ class AsofNativeSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       case w: org.apache.spark.sql.execution.window.WindowExec => w
     }
     assert(windows.isEmpty, "native path must not fall back to the window composition")
-    // exactly the SMJ topology: one hash exchange per side (plus the final
-    // presentation range exchange, which is not hash-partitioned)
+    // exactly the SMJ topology: one hash exchange per side
     val hashEx = collectWithSubqueries(plan) {
       case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
           if e.outputPartitioning

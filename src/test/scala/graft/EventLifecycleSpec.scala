@@ -126,8 +126,8 @@ class EventLifecycleSpec extends SparkSpec
       df.collect() // finalize the AQE plan before matching tree nodes
       val plan = df.queryExecution.executedPlan
       val shuffles = collectWithSubqueries(plan) { case e: ShuffleExchangeLike => e }
-      // hash exchanges move the stream; the final presentation orderBy is a
-      // range exchange over the (already tiny) result and doesn't count.
+      // hash exchanges move the stream; the final presentation orderBy
+      // sorts and merges the (already tiny) result without an exchange.
       // Match the node's OWN partitioning — a node's toString prints its
       // whole subtree, which would double-count downstream exchanges.
       val streamShuffles = shuffles.count { e =>

@@ -73,10 +73,10 @@ class ModernSqlSpec extends SparkSpec {
 
   test("hof_array_pipeline equals the posexplode twin and shuffles only for the final sort") {
     val df = ModernSqlOps.hofArrayPipeline(spark, sfDir)
-    // the per-row lambda pipeline must be map-only: the ONE exchange in
-    // the whole plan is the presentation sort's range partitioning —
-    // a posexplode/groupBy formulation would add a fact-scale hash
-    // exchange before it
+    // the per-row lambda pipeline must be map-only: a collected root sort
+    // plans as OrderedCollectExec with no exchange, and at most one is
+    // allowed — a posexplode/groupBy formulation would add a fact-scale
+    // hash exchange
     val exchanges = df.queryExecution.executedPlan.toString
       .linesIterator.count(_.contains("Exchange"))
     assert(exchanges <= 1, s"expected at most the sort exchange, found $exchanges")

@@ -23,11 +23,25 @@ class ProbeSpec extends SparkSpec {
     assert(!plan.contains("isFinalPlan=false"), plan)
   }
 
+  test("run_s times collect(), and each job line names its SQL execution") {
+    val dir = tmpDir("graft-probe-collect")
+    val reps = probe("q1_perf_over_time")(_.copy(plans = Some(dir)))
+    // count() would drop the root sort; collect() plans it
+    assert(Files.readString(Paths.get(dir, "q1_perf_over_time.txt")).contains("OrderedCollect"))
+    reps.foreach { r =>
+      val ids = r.execs.map(_.id.toString).toSet
+      val tagged = r.jobs.flatMap(j => "execution=(\\d+) \\(".r.findFirstMatchIn(j).map(_.group(1)))
+      assert(tagged.nonEmpty && tagged.size == r.jobs.size, r.jobs)
+      assert(tagged.forall(ids), (r.jobs, r.execs))
+      assert(r.execs.exists(e => e.description.startsWith("collect at") && e.ms >= 0), r.execs)
+    }
+  }
+
   test("a DML script reports each statement as its own SQL execution") {
     val reps = probe("sql_merge_into")()
     assert(reps.size == 2)
     reps.foreach { r =>
-      assert(r.execs.size >= 2, r.execs.map(_.name))
+      assert(r.execs.size >= 2, r.execs)
       assert(r.jobs.nonEmpty)
     }
   }
@@ -59,6 +73,6 @@ class ProbeSpec extends SparkSpec {
     // a later probe of a streaming query drains all three listener queues
     val later = probe("stream_tumbling_window")()
     assert(later.forall(r => r.jobs.nonEmpty && r.execs.nonEmpty && r.batches.nonEmpty))
-    Seq(done, failed).foreach(r => assert(r.take() == ((Nil, Nil, Nil))))
+    Seq(done, failed).foreach(r => assert(r.take() == Probe.Recorded(Nil, Nil, Nil, Nil)))
   }
 }

@@ -1,10 +1,7 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-
 import scala.util.Try
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
 import graft.engine.{ResultCache, Tables}
@@ -15,42 +12,6 @@ import graft.engine.{ResultCache, Tables}
   * through a `file:` prefix.
   */
 class SchemaCacheSpec extends SparkSpec {
-  private val SentinelProp = "graft.test.sentinel"
-
-  /** Counts job starts outside the sentinel jobs [[jobsDuring]] uses to
-    * drain the listener bus (it delivers events in order, so once the
-    * sentinel's start is seen, every earlier job's start has been too). */
-  private object counter extends SparkListener {
-    val jobs = new AtomicInteger(0)
-    val sentinels = new AtomicInteger(0)
-    override def onJobStart(e: SparkListenerJobStart): Unit =
-      if (Option(e.properties).exists(_.getProperty(SentinelProp) != null))
-        sentinels.incrementAndGet()
-      else jobs.incrementAndGet()
-  }
-  private lazy val registered: Unit = spark.sparkContext.addSparkListener(counter)
-
-  private def drain(): Unit = {
-    registered
-    val sc = spark.sparkContext
-    val seen = counter.sentinels.get
-    sc.setLocalProperty(SentinelProp, "1")
-    try sc.parallelize(Seq(1), 1).count()
-    finally sc.setLocalProperty(SentinelProp, null)
-    val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-    while (counter.sentinels.get <= seen && System.nanoTime() < deadline) Thread.sleep(5)
-    assert(counter.sentinels.get > seen, "listener bus did not deliver the sentinel job")
-  }
-
-  /** `body`'s result and the number of Spark jobs it started. */
-  private def jobsDuring[T](body: => T): (T, Int) = {
-    drain()
-    val before = counter.jobs.get
-    val r = body
-    drain()
-    (r, counter.jobs.get - before)
-  }
-
   test("fingerprint: a file: prefix names the same files, and a rewrite changes it") {
     val d = tmpDir("graft-fp")
     spark.range(3).write.parquet(s"$d/t.parquet")
@@ -65,9 +26,9 @@ class SchemaCacheSpec extends SparkSpec {
   test("a repeated read of an unchanged path starts no inference job; a rewrite is seen") {
     val d = tmpDir("graft-schema")
     spark.range(5).write.parquet(s"$d/t.parquet")
-    val (_, first) = jobsDuring(Tables.table(spark, d, "t"))
+    val (_, first) = JobCount.during(Tables.table(spark, d, "t"))
     assert(first == 1, "the first read infers the schema with one job")
-    val (again, second) = jobsDuring(Tables.table(spark, d, "t"))
+    val (again, second) = JobCount.during(Tables.table(spark, d, "t"))
     assert(second == 0, "the second read reuses the cached schema")
     assert(again.count() == 5)
     // self-join: every call is a fresh relation with fresh exprIds
@@ -90,7 +51,7 @@ class SchemaCacheSpec extends SparkSpec {
     try {
       spark.conf.set(flag, "false")
       val plain = Try(spark.read.parquet(events).schema)
-      val (cached, jobs) = jobsDuring(Try(Tables.table(spark, sfDir, "events").schema))
+      val (cached, jobs) = JobCount.during(Try(Tables.table(spark, sfDir, "events").schema))
       assert(cached.toOption == plain.toOption)
       assert(cached.failed.toOption.map(_.getMessage) == plain.failed.toOption.map(_.getMessage))
       assert(jobs == 1, "the conf change re-infers")
@@ -118,7 +79,7 @@ class SchemaCacheSpec extends SparkSpec {
     val miss = ResultCache.run(spark, query, tag)
     assert(miss.count() == 6)
     val hits = ResultCache.hits.get
-    val (hit, jobs) = jobsDuring(ResultCache.run(spark, query, tag))
+    val (hit, jobs) = JobCount.during(ResultCache.run(spark, query, tag))
     assert(ResultCache.hits.get == hits + 1)
     assert(jobs == 0, "a hit reads the stored result with its cached schema")
     assert(hit.collect().map(_.getLong(0)).sorted.toSeq == (4L to 9L))
